@@ -1,7 +1,8 @@
-"""Face-level partitioning invariance: the scalable two-pass plans
-(deterministic borders + offsets) must produce IDENTICAL results under
-different shuffle-partition settings — hidden dependence on partition
-count is the classic way a 'scalable' rank/prefix path goes wrong."""
+"""Face-level partitioning invariance: the scalable plans (deterministic
+borders + exact offsets, carry-ins and halos) must produce IDENTICAL
+results under different shuffle-partition settings — hidden dependence on
+partition count is the classic way a 'scalable' rank/prefix path goes
+wrong."""
 
 import pytest
 
@@ -15,6 +16,10 @@ FACES = [
     "gains_deciles_embeddings",
     "running_revenue_global",
     "heavy_hitters_trigrams_documents",
+    "sliding_min_79_scalable",
+    "sliding_max_91_scalable",
+    "late_arrival_audit_events",
+    "pack_documents_2k",
 ]
 
 

@@ -13,6 +13,8 @@ and the co-shipping densification guard.
 
 from __future__ import annotations
 
+import re
+
 from uw_mapreduce_spark.plans.catalog import QUERIES, _coship_supplier_edges
 
 
@@ -181,3 +183,26 @@ def test_pareto_scalable_route_avoids_unpartitioned_window(spark):
 
     for m in re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
         assert "_pid" in m.group(1), f"unpartitioned window survived: {m.group(0)[:200]}"
+
+
+def test_scalable_sliding_output_plans_shuffle_once(spark):
+    """The scalable sliding routes finish in ONE output plan: the border
+    passes run eagerly, then a single range exchange carries every row
+    and its halo copies to the per-range windows — no cache, no
+    broadcast of offsets, no RDD round trip, no self-join exchange."""
+    from pyspark.sql import functions as F
+
+    from uw_mapreduce_spark.operators.scale import (
+        sliding_aggregate_scalable,
+        sliding_minmax_scalable,
+    )
+
+    df = spark.range(5000).select(
+        (F.xxhash64("id") % 1000).alias("key"), F.col("id").alias("value")
+    )
+    for fn, agg in ((sliding_aggregate_scalable, "sum"), (sliding_minmax_scalable, "max")):
+        plan = _plan(fn(df, ["key", "value"], "value", 91, agg=agg, num_partitions=8))
+        assert len(re.findall(r"\bExchange\b", plan)) == 1, (agg, plan)
+        for banned in ("InMemoryRelation", "InMemoryTableScan", "BroadcastExchange",
+                       "ExistingRDD", "Scan RDD"):
+            assert banned not in plan, (agg, banned)

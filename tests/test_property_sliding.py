@@ -3,6 +3,9 @@ brute-force model on arbitrary inputs (hypothesis-generated)."""
 
 from __future__ import annotations
 
+import datetime
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -12,47 +15,118 @@ from uw_mapreduce_spark.operators.scale import (
 )
 from uw_mapreduce_spark.operators.window import sliding_aggregate
 
-rows_strategy = st.lists(
-    st.tuples(st.integers(-1000, 1000), st.integers(-10**6, 10**6)),
-    min_size=1,
-    max_size=40,
+_int_keys = st.one_of(st.none(), st.integers(-1000, 1000))
+_double_keys = st.one_of(
+    st.none(), st.just(float("nan")), st.floats(-1e3, 1e3, allow_nan=False)
 )
+_values = st.integers(-10**6, 10**6)
+# NULL keys sort first and NaN keys last in Spark; windows up to 60 rows
+# exceed every input (max 40 rows), and up to 50 partitions exceed its
+# distinct keys.
+rows_strategy = st.one_of(
+    st.tuples(st.just("long"), st.lists(st.tuples(_int_keys, _values), min_size=1, max_size=40)),
+    st.tuples(st.just("double"), st.lists(st.tuples(_double_keys, _values), min_size=1, max_size=40)),
+)
+_AGGS = {
+    "sum": sum, "count": len, "avg": lambda w: sum(w) / len(w), "min": min, "max": max,
+}
+
+
+def _sort_key(row):
+    k, v = row
+    if k is None:
+        return (0, 0, v)
+    return (2, 0, v) if k != k else (1, k, v)
 
 
 def brute(rows, l, agg):
-    ordered = sorted(rows)
+    ordered = sorted(rows, key=_sort_key)
     out = []
     for r in range(len(ordered)):
         win = [v for _, v in ordered[max(0, r - l + 1): r + 1]]
-        out.append((r, {"sum": sum, "min": min, "max": max}[agg](win)))
+        out.append((r, _AGGS[agg](win)))
     return out
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=rows_strategy, l=st.integers(1, 50))
-def test_sliding_paths_match_brute_force(spark, rows, l):
-    df = spark.createDataFrame(rows, "key long, value long")
-    expected_sum = brute(rows, l, "sum")
-    got_w = sorted(
-        (r["rank"], r["agg"])
-        for r in sliding_aggregate(df, ["key", "value"], "value", l).collect()
+@given(typed_rows=rows_strategy, l=st.integers(1, 60), p=st.integers(2, 50))
+def test_sliding_paths_match_brute_force(spark, typed_rows, l, p):
+    key_type, rows = typed_rows
+    df = spark.createDataFrame(rows, f"key {key_type}, value long")
+    for agg in _AGGS:
+        expected = brute(rows, l, agg)
+        got_w = sorted(
+            (r["rank"], r["agg"])
+            for r in sliding_aggregate(df, ["key", "value"], "value", l, agg=agg).collect()
+        )
+        scalable = sliding_minmax_scalable if agg in ("min", "max") else sliding_aggregate_scalable
+        got_s = sorted(
+            (r["rank"], r["agg"])
+            for r in scalable(
+                df, ["key", "value"], "value", l, agg=agg, num_partitions=p
+            ).collect()
+        )
+        assert got_w == expected, agg
+        assert got_s == expected, agg
+
+
+_COLLAPSED = 2**60  # bigints within 2^7 of this share one double image
+_CORE_KEYS = {
+    "int": ("int", st.integers(-50, 50)),
+    "bigint": ("bigint", st.integers(-(2**62), 2**62)),
+    "bigint_collapsed": ("bigint", st.integers(_COLLAPSED, _COLLAPSED + 64)),
+    "double": (
+        "double",
+        st.one_of(
+            st.floats(-1e6, 1e6, allow_nan=False),
+            st.sampled_from([float("nan"), float("inf"), float("-inf")]),
+        ),
+    ),
+    "timestamp": (
+        "timestamp",
+        st.datetimes(datetime.datetime(2000, 1, 1), datetime.datetime(2030, 1, 1)),
+    ),
+    "string": ("string", st.text("abcxyz", max_size=4)),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_CORE_KEYS))
+def test_core_layout_is_exact(spark, kind):
+    """The driver-side layout of the scalable core is exact, not an
+    estimate: its per-range own counts equal ``groupBy(_pid).count()``
+    of the tagged rows, and the halo copies it predicts are exactly the
+    extra rows the explode emits — for every key type the border passes
+    handle (histogram, refined histogram, sampled cuts), NULL keys, a
+    hot key, and bigints whose double images collapse."""
+    import pyspark.sql.functions as F
+
+    from uw_mapreduce_spark.operators.scale import _layout, _spread
+
+    key_type, keys = _CORE_KEYS[kind]
+
+    @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(
+        cold=st.lists(st.one_of(st.none(), keys), min_size=1, max_size=60),
+        hot=st.tuples(keys, st.integers(0, 40)),
+        p=st.integers(2, 7),
+        halo=st.integers(0, 12),
     )
-    got_s = sorted(
-        (r["rank"], r["agg"])
-        for r in sliding_aggregate_scalable(
-            df, ["key", "value"], "value", l, num_partitions=3
-        ).collect()
-    )
-    assert got_w == expected_sum
-    assert got_s == expected_sum
-    expected_min = brute(rows, l, "min")
-    got_m = sorted(
-        (r["rank"], r["agg"])
-        for r in sliding_minmax_scalable(
-            df, ["key", "value"], "value", l, agg="min", num_partitions=3
-        ).collect()
-    )
-    assert got_m == expected_min
+    def check(cold, hot, p, halo):
+        rows = [(k,) for k in cold + [hot[0]] * hot[1]]
+        df = spark.createDataFrame(rows, f"k {key_type}")
+        lay = _layout(df, "k", p, halo=halo)
+        assert len(lay.counts) == len(lay.borders) + 1 <= p
+        tagged = _spread(df, "k", lay, p)
+        # Without any halo copy the frame carries no ``_dst`` column.
+        own = tagged.where(F.col("_pid") == F.col("_dst")) if "_dst" in tagged.columns else tagged
+        counts = dict(own.groupBy("_pid").count().collect())
+        assert [counts.get(j, 0) for j in range(len(lay.counts))] == lay.counts
+        assert tagged.count() == len(rows) + sum(lay.halo_rows)
+        before = [sum(lay.counts[:j]) for j in range(len(lay.counts))]
+        assert [s + h for s, h in zip(lay.starts, lay.halo_rows)] == before
+        assert all(h >= min(halo, b) for h, b, c in zip(lay.halo_rows, before, lay.counts) if c)
+
+    check()
 
 
 @settings(deadline=None, max_examples=12, suppress_health_check=list(HealthCheck))

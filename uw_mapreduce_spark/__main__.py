@@ -14,8 +14,9 @@ Reads the reference's tab-separated ``key\\tvalue`` text (or parquet with
 key/value columns), runs rank + trailing-window aggregation, writes
 ``rank\\tkey\\tagg`` (text, matching the reference's output layout
 contract) or parquet.  ``--threshold`` is accepted for CLI parity but
-unused: the sampling job exists only to compute partition borders, which
-Spark's RangePartitioner does internally (SURVEY.md §4).
+unused: the reference's sampling job exists only to compute partition
+borders, which ``--scalable`` derives from deterministic histogram passes
+instead (``operators/scale.py``) and the Window route does not need.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("output", help="output path")
     ap.add_argument("--window", type=int, default=10, help="window length l (reference -D my.window)")
     ap.add_argument("--partitions", type=int, default=None, help="shuffle partitions (reference -D my.reducers)")
-    ap.add_argument("--threshold", type=float, default=None, help="accepted for reference parity; unused (borders come from Spark's internal sampling)")
+    ap.add_argument("--threshold", type=float, default=None, help="accepted for reference parity; unused (--scalable derives borders from deterministic histogram passes)")
     ap.add_argument("--agg", default="sum", choices=["sum", "min", "max", "count", "avg"])
     ap.add_argument("--scalable", action="store_true", help="use the no-single-partition path")
     ap.add_argument("--format", default="text", choices=["text", "parquet", "csv"])

@@ -65,6 +65,11 @@ def persist_scoped(df: DataFrame, scope: str, keep: int = 2) -> DataFrame:
     reuse, and it keeps one eviction from orphaning a handle that a
     later registration of the same plan would otherwise share.
 
+    A stale handle whose plan matches ``df`` (its entry was dropped, e.g.
+    by ``spark.catalog.clearCache()``) leaves the scope without an
+    ``unpersist()``: unpersist also matches by plan, so evicting it later
+    would uncache the entry registered now.
+
     Lifecycle contract: frames cached this way must be DETERMINISTIC to
     recompute (stable source + deterministic partitioning/expressions).
     If a still-lazy plan outlives its cache entry, Spark recomputes the
@@ -74,6 +79,7 @@ def persist_scoped(df: DataFrame, scope: str, keep: int = 2) -> DataFrame:
         if df.storageLevel != StorageLevel.NONE:
             return df
         frames = _scoped.setdefault(scope, [])
+        frames[:] = [f for f in frames if not f.sameSemantics(df)]
         frames.append(df.persist(StorageLevel.MEMORY_AND_DISK))
         evicted = []
         while len(frames) > keep:

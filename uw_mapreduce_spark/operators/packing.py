@@ -35,9 +35,10 @@ def pack_documents(
     with zero tokens occupy no window; their first/last pack is the
     window their offset points at.
 
-    Scale: one range exchange + P-row offset collect (the same
-    ``_ranged_with_offsets`` plan as the scalable rank/sliding family) —
-    per-task memory O(n/P), shuffle carries each row once.
+    Scale: the border passes' exact intervals give each range its token
+    carry-in, then one range exchange and a per-range running sum (the
+    same ``_ranged_with_offsets`` core as the scalable rank/sliding
+    family) — per-task memory O(n/P), shuffle carries each row once.
     """
     from .scale import _ranged_with_offsets
 

@@ -88,12 +88,12 @@ def global_rank_scalable(
 ) -> DataFrame:
     """0-based global rank with no single-partition stage (100 TB path).
 
-    Plan: range-partition by ``order_by`` (Spark's sampled
-    RangePartitioner ≈ reference Sample+Sort jobs), per-partition counts
-    collected as P tiny rows (≈ O8 sentinel counts), broadcast back as
-    rank offsets added to a per-partition row_number (≈ O9 prefix-count
-    ranking) — the two-pass prefix-count algorithm, entirely JVM-side
-    (see scale._ranged_with_offsets).
+    Plan (see scale._ranged_with_offsets): deterministic border passes
+    over the first ``order_by`` column yield exact key intervals (≈ the
+    reference's Sample job plus its O8 sentinel counts); the driver turns
+    their counts into each range's rank offset, which enters the output
+    plan as a literal array added to a per-range row_number after one
+    range exchange (≈ O9 prefix-count ranking) — entirely JVM-side.
     """
     from .scale import _ranged_with_offsets
 

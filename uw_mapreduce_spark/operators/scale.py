@@ -5,40 +5,37 @@ a single partition in Spark — correct but a one-task bottleneck.  The
 reference solves global windowing with 5 MR jobs: sampled range partition
 (Sample+Sort), prefix-count ranking (Rank), equal-width rebalance
 (Perfect), bounded replication + per-partition totals + prefix-sum window
-evaluation (Aggr) — `/root/reference/src/SlidingAggregation.java:433-536`.
+evaluation (Aggr) — `SlidingAggregation.java:433-536`.
 
-This module reproduces those guarantees (O(n/P) per-task memory, O(1)
-extra rounds, no broadcast of data) with a Spark-native plan that stays
-entirely JVM-side — no Python row serialization anywhere:
+This module runs the same query in three rounds, entirely JVM-side:
 
-  1. deterministic range partitioning — a bounded border pass
-     (the reference's Sample job re-derived as a commutative min/max/count
-     histogram, see ``_deterministic_borders``) assigns each row an
-     explicit partition-id column with the key property that partition
-     i's keys all precede partition i+1's.  The ranged frame is cached
-     for the two passes, but because the borders are a pure function of
-     the data, cache loss or early release merely recomputes identical
-     partitions — it can never re-border mid-query (which Spark's
-     randomly-seeded RangePartitioner could, under cache eviction).
-  2. pass 1: per-partition (count, total) via ``groupBy(pid)`` — a
-     JVM hash aggregate replacing the reference's in-band sentinel
-     counts (:159-168) and partition totals (:305-310); P tiny rows
-     collected and turned into prefix offsets on the driver.
-  3. pass 2: a PER-PARTITION window (PARTITION BY pid ORDER BY key) —
-     parallel, spillable — assigns local row numbers and local prefix
-     sums; broadcast-joining the P-row offset table turns them into the
-     global rank (replaces job 3) and the global running aggregate
-     S(r) (replaces job 5's prefix pass :401-417).
-  4. window by prefix difference: agg over ranks [r-l+1, r] is
-     S(r) - S(r-l), fetched with an equi self-join on rank-l — a plain
-     shuffled 1:1 join instead of the reference's bounded replication
-     (job 4, :241-313).  Data shipped twice total, independent of
-     window size — strictly better than the reference's ≤3× which
-     degrades as l grows.
+  1. stats pass — key count/min/max and the NULL-/NaN-key row counts.
+  2. interval pass(es) — ``_intervals``: exact, disjoint
+     ``(count, min, max[, carry])`` key intervals from a bounded
+     fixed-width histogram (≤2 refinement passes under skew), or, for
+     keys the histogram cannot bin, one exact counting pass cut at
+     sampled keys.  The driver derives everything else from these
+     intervals (``_layout``): equi-depth range borders, every range's
+     exact row count and so its global rank offset, prefix-sum /
+     prefix-max carry-ins, and a halo lower bound — the smallest key such
+     that the rows from it up to the range start cover ``window - 1``
+     rows, or every earlier row.
+  3. output pass — one plan: tag each row with its range ``_pid``, copy
+     it into every later range whose halo holds its key
+     (``explode(sequence(_pid, reach))``), one ``repartition(P, _dst)``,
+     then per-range windows in key order: global rank = offset + local
+     row number, the trailing aggregate from local running values (sum:
+     S(r) - S(r-l) with ``lag``; min/max: block decomposition), and keep
+     only each range's own rows.
 
-Every stage is O(n/P) memory and fully parallel.  The prefix-difference
-trick requires an invertible aggregate (sum/count/avg); non-invertible
-aggregates (min/max) route to the Window path or a partition_by spec.
+The offsets, carry-ins and halo bounds enter the plan as literal arrays
+indexed by range id — no cache, no broadcast, no self-join.  The halo is the reference's bounded replication
+(job 4, :241-313) sized from exact counts: a range receives its
+``window - 1`` predecessors rounded up to whole intervals, so a heavy key
+that ends a range can make one halo as large as that key — per-task
+memory stays at most 2× the largest range.  Every aggregate the driver
+reads is commutative, so the layout — and every result — is a pure
+function of the data multiset, whatever the input partitioning.
 
 Integer values accumulate in int64 (the reference's int32 overflow
 fixed — SURVEY.md §2.3.5); floats accumulate in double.
@@ -46,20 +43,19 @@ fixed — SURVEY.md §2.3.5); floats accumulate in double.
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
-
-from ..caching import persist_scoped
 
 _INVERTIBLE = ("sum", "count", "avg")
-_SCOPE = "uwms.scale"
-
 
 _HIST_TYPES = (
     "tinyint", "smallint", "int", "bigint", "float", "double",
     "date", "timestamp", "timestamp_ntz",
 )
+_CARRY = {"sum": F.sum, "max": F.max}
 
 
 def _as_double(key, dtype: str):
@@ -79,14 +75,17 @@ def _as_double(key, dtype: str):
 
 
 def _borders_from_intervals(intervals, n: int, num_partitions: int) -> list:
-    """Equi-depth walk over disjoint (count, min, max) intervals sorted
-    by key: border i is the top key of the interval where cumulative
-    EXACT row count crosses i·n/P — `chooseBorders`
+    """Equi-depth walk over disjoint (count, min, max, ...) intervals
+    sorted by key: border i is the top key of the interval where
+    cumulative EXACT row count crosses i·n/P — `chooseBorders`
     (`SlidingAggregation.java:75-83`) with intervals in place of sample
-    elements.  Borders are actual data values (interval maxima)."""
+    elements.  Borders are actual data values (interval maxima); fewer
+    than two intervals means one key span, so no borders."""
     borders: list = []
+    if len(intervals) < 2:
+        return borders
     cum, j = 0, 1
-    for cnt, mn, mx in intervals:
+    for cnt, _mn, mx, *_ in intervals:
         cum += cnt
         while j < num_partitions and cum * num_partitions >= j * n:
             if not borders or mx > borders[-1]:
@@ -97,63 +96,68 @@ def _borders_from_intervals(intervals, n: int, num_partitions: int) -> list:
     return borders
 
 
-def _borders_histogram(
-    keyed: DataFrame, dtype: str, num_partitions: int, buckets_per_partition: int
-) -> list:
-    """Equi-depth borders from a deterministic bounded histogram.
+def _count_below(key, values: list, inclusive: bool, base: int = 0):
+    """``base`` + the number of sorted ``values`` below ``key`` (``<=``
+    when ``inclusive``, else ``<``) as a BALANCED comparison tree —
+    O(log k) comparisons per row, expression size O(k)."""
 
-    One stats aggregate (count/min/max — one scan, P tiny partials),
-    then one histogram aggregate ``groupBy(bucket)`` over
-    B = buckets_per_partition·P fixed-width buckets — map-side combine
-    caps each task's shuffle output at B rows, so unlike an exact
-    distinct-key aggregate the shuffle is O(maps·B) REGARDLESS of key
-    cardinality (the round-3 fix: a near-unique key no longer shuffles
-    ~n rows before the real range exchange).  Every aggregate used
-    (count/min/max) is commutative, so the result — and therefore the
-    partitioning — is a pure function of the data multiset, independent
-    of task order or input partitioning.
+    def tree(lo: int, hi: int):
+        if lo == hi:
+            return F.lit(base + lo)
+        mid = (lo + hi) // 2
+        v = F.lit(values[mid])
+        return F.when(key >= v if inclusive else key > v, tree(mid + 1, hi)).otherwise(
+            tree(lo, mid)
+        )
+
+    return tree(0, len(values))
+
+
+def _pid_expr(order_col: str, borders: list):
+    """Range id for a key given sorted borders: range j holds keys in
+    (b_{j-1}, b_j]; NULL keys take range 0 (Spark ASC sorts NULLS FIRST)
+    and NaN, above every value, the last.  The reference's linear
+    ``find_border`` (`SlidingAggregation.java:128-134`) becomes
+    `_count_below`'s balanced tree."""
+    key = F.col(order_col)
+    if not borders:
+        return F.lit(0)
+    return F.when(key.isNull(), F.lit(0)).otherwise(_count_below(key, borders, False))
+
+
+def _histogram_intervals(keyed, dtype, stats, num_partitions, buckets_per_partition, carry):
+    """Exact intervals from a deterministic bounded histogram: one
+    ``groupBy(bucket)`` over B = buckets_per_partition·P fixed-width
+    buckets of the key's double image (map-side combine caps each task's
+    shuffle output at B rows, whatever the key cardinality).  Binning is
+    monotone in the key, so buckets are disjoint, exact key intervals.
 
     Overweight buckets (count > n/4P, more than one distinct key) are
     refined in ≤2 further bounded passes of 64 sub-buckets each over the
     ACTUAL per-bucket [min, max] span; a bucket that narrows to
     min == max is a heavy key seen with its EXACT count, so a hot key
     pulls borders toward equal row counts and gets its range to itself
-    (equal keys must share a partition — extreme skew yielding fewer
-    than P ranges IS the equal-rows optimum).  At most 4P buckets can
-    exceed n/4P, so each refinement collects ≤ 4P·64 rows: driver bytes
-    stay O(P), n-independent.
+    (equal keys must share a range — extreme skew yielding fewer than P
+    ranges IS the equal-rows optimum).  At most 4P buckets can exceed
+    n/4P, so each refinement collects ≤ 4P·64 rows: driver bytes stay
+    O(P), n-independent.
     """
     key = F.col("_k")
     kd = _as_double(key, dtype)
-    if dtype in ("float", "double"):
-        # NaN sorts above every value in Spark; excluded here, NaN rows
-        # fall past every border into the last range — the sort-correct
-        # placement — without poisoning min/max/binning.
-        keyed = keyed.where(~F.isnan(key))
-    stats = keyed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(key).alias("mn"), F.max(key).alias("mx"),
-        F.min(kd).alias("mnd"), F.max(kd).alias("mxd"),
-    ).collect()[0]
     n = stats["n"]
-    if n == 0 or stats["mn"] == stats["mx"]:
-        return []
-    import math
-
-    mnd, mxd = float(stats["mnd"]), float(stats["mxd"])
-    if not (mxd > mnd) or not (math.isfinite(mnd) and math.isfinite(mxd)):
-        # Double images collapse (bigints differing only below 2^-53 of
-        # their magnitude) or are non-finite (±Infinity keys make every
-        # bin width infinite): binning cannot discriminate — exact
-        # fallback.
-        return _borders_exact(keyed, n, num_partitions, buckets_per_partition)
-
     level0 = max(2 * num_partitions, buckets_per_partition * num_partitions)
     child_b = max(8, min(64, buckets_per_partition))
     refine_min = max(2, n // (4 * num_partitions))
-    final: list = []  # (count, min, max)
+    aggs = [
+        F.count(F.lit(1)).alias("_c"),
+        F.min(key).alias("_mn"), F.max(key).alias("_mx"),
+        F.min(kd).alias("_mnd"), F.max(kd).alias("_mxd"),
+    ]
+    if carry:
+        aggs.append(_CARRY[carry](F.col("_v")).alias("_cv"))
+    final: list = []  # (count, min, max, carry)
     pending = [(stats["mn"], stats["mx"], stats["mnd"], stats["mxd"], level0)]
-    for _depth in range(3):  # level-0 pass + ≤2 refinement passes
+    for depth in range(3):  # level-0 pass + ≤2 refinement passes
         if not pending:
             break
         expr, off = None, 0
@@ -168,65 +172,112 @@ def _borders_histogram(
             expr = F.when(cond, b) if expr is None else expr.when(cond, b)
             off += nb
         buckets = sorted(
-            (tuple(r) for r in keyed.select(expr.alias("_b"), "_k")
+            (tuple(r) for r in keyed.withColumn("_b", expr)
              .where(F.col("_b").isNotNull())
-             .groupBy("_b")
-             .agg(
-                 F.count(F.lit(1)).alias("_c"),
-                 F.min(key).alias("_mn"), F.max(key).alias("_mx"),
-                 F.min(kd).alias("_mnd"), F.max(kd).alias("_mxd"),
-             ).collect()),
+             .groupBy("_b").agg(*aggs).collect()),
             key=lambda t: t[0],
         )
         pending = []
-        for _b, cnt, mn, mx, mnd, mxd in buckets:
-            if _depth < 2 and cnt > refine_min and mn != mx and mxd > mnd:
+        for _b, cnt, mn, mx, mnd, mxd, *cv in buckets:
+            if depth < 2 and cnt > refine_min and mn != mx and mxd > mnd:
                 pending.append((mn, mx, mnd, mxd, child_b))
             else:
-                final.append((cnt, mn, mx))
-    assert not pending  # the last pass routes everything to `final`
+                final.append((cnt, mn, mx, cv[0] if cv else None))
     final.sort(key=lambda t: (t[1], t[2]))
-    return _borders_from_intervals(final, n, num_partitions)
+    return final
 
 
-def _borders_exact(
-    keyed: DataFrame, n: int, num_partitions: int, sample_per_partition: int
-) -> list:
-    """Exact-count fallback for key types the histogram cannot bin
-    (strings, or numerics whose double image collapses): hash-sampled
-    distinct-key aggregate — the original round-3 path.  The groupBy
-    shuffles up to one row per distinct key per input partition, so this
-    is reserved for the non-numeric case; HEAVY keys (count ≥ n/4P)
-    enter unconditionally with exact weight, LIGHT keys enter iff
-    ``xxhash64(key) % mod == 0`` with Horvitz-Thompson weight count·mod,
-    and driver rows are hard-capped at 4·target in a deterministic total
-    order."""
+def _sampled_intervals(keyed, n, num_partitions, sample_per_partition, carry):
+    """Exact intervals for keys the histogram cannot bin (strings, or
+    numerics whose double image collapses or is non-finite).
+
+    A hash-sampled distinct-key aggregate picks cut keys: HEAVY keys
+    (count ≥ n/4P) enter unconditionally with exact weight, LIGHT keys
+    iff ``xxhash64(key) % mod == 0`` with Horvitz-Thompson weight
+    count·mod, capped at 4·target driver rows in a deterministic total
+    order; the weighted equi-depth walk keeps 16P cuts.  One counting
+    pass then bins every key by its cut (`_count_below`), so the
+    intervals — ``(c_{i-1}, c_i]`` — carry exact counts like the
+    histogram's."""
+    key = F.col("_k")
     target = sample_per_partition * num_partitions
     mod = max(1, n // target)
-    heavy_min = max(2, n // (4 * num_partitions))
-    counts = keyed.groupBy("_k").agg(F.count(F.lit(1)).alias("_c"))
-    heavy = F.col("_c") >= heavy_min
-    cand = counts.where(
-        heavy | (F.pmod(F.xxhash64(F.col("_k")), F.lit(mod)) == 0)
-    ).select(
-        "_k",
-        F.when(heavy, F.col("_c")).otherwise(F.col("_c") * mod).alias("_w"),
-        heavy.alias("_h"),
+    heavy = F.col("_c") >= max(2, n // (4 * num_partitions))
+    cand = (
+        keyed.groupBy("_k").agg(F.count(F.lit(1)).alias("_c"))
+        .where(heavy | (F.pmod(F.xxhash64(key), F.lit(mod)) == 0))
+        .select("_k", F.when(heavy, F.col("_c")).otherwise(F.col("_c") * mod).alias("_w"),
+                heavy.alias("_h"))
     )
-    pairs = sorted(
-        (r[0], r[1])
-        for r in cand.orderBy(
-            F.col("_h").desc(), F.xxhash64(F.col("_k")), F.col("_k")
+    sample = sorted(
+        (r["_k"], r["_w"]) for r in cand.orderBy(F.col("_h").desc(), F.xxhash64(key), key)
+        .limit(4 * target).collect()
+    )
+    cuts = _borders_from_intervals(
+        [(w, k, k) for k, w in sample], sum(w for _, w in sample), 16 * num_partitions
+    )
+    aggs = [F.count(F.lit(1)).alias("_c"), F.min(key).alias("_mn"), F.max(key).alias("_mx")]
+    if carry:
+        aggs.append(_CARRY[carry](F.col("_v")).alias("_cv"))
+    rows = keyed.groupBy(_count_below(key, cuts, False).alias("_b")).agg(*aggs).collect()
+    return [(c, mn, mx, cv[0] if cv else None) for _b, c, mn, mx, *cv in sorted(rows)]
+
+
+def _intervals(df, order_col, num_partitions, value_col=None, carry=None,
+               buckets_per_partition=64):
+    """Border passes: ``(n, intervals, head, tail)``.
+
+    ``intervals`` are exact, disjoint, key-sorted ``(count, min, max,
+    carry)`` over the ``n`` keys that are neither NULL nor NaN; ``carry``
+    is the ``carry`` aggregate ("sum" or "max") of ``value_col`` over the
+    interval, None without one.  ``head`` / ``tail`` are ``(count,
+    carry)`` of the NULL-key rows (which sort first) and the NaN-key rows
+    (which sort last), both from the stats pass."""
+    key = F.col("_k")
+    keyed = df.select(
+        F.col(order_col).alias("_k"), *([F.col(value_col).alias("_v")] if carry else [])
+    )
+    dtype = dict(keyed.dtypes)["_k"]
+    hist = dtype in _HIST_TYPES or dtype.startswith("decimal")
+    floating = dtype in ("float", "double")
+    # NaN sorts above every value in Spark; kept out of the intervals so it
+    # cannot poison min/max/binning, it falls past every border into the
+    # last range — the sort-correct placement.
+    valid = key.isNotNull() & ~F.isnan(key) if floating else key.isNotNull()
+
+    def edge(cond, name):
+        out = [F.count(F.when(cond, 1)).alias(name)]
+        if carry:
+            out.append(_CARRY[carry](F.when(cond, F.col("_v"))).alias(name + "_v"))
+        return out
+
+    aggs = [F.count(F.when(valid, 1)).alias("n"),
+            F.min(F.when(valid, key)).alias("mn"), F.max(F.when(valid, key)).alias("mx")]
+    aggs += edge(key.isNull(), "head") + (edge(F.isnan(key), "tail") if floating else [])
+    if hist:
+        kd = _as_double(key, dtype)
+        aggs += [F.min(F.when(valid, kd)).alias("mnd"), F.max(F.when(valid, kd)).alias("mxd")]
+    stats = keyed.agg(*aggs).collect()[0].asDict()
+
+    def side(name):
+        return (stats.get(name) or 0, stats.get(name + "_v"))
+
+    n, head, tail = stats["n"], side("head"), side("tail")
+    if n == 0 or stats["mn"] == stats["mx"]:
+        intervals = [(n, stats["mn"], stats["mx"], None)] if n else []
+    elif hist and math.isfinite(stats["mnd"]) and math.isfinite(stats["mxd"]) \
+            and stats["mxd"] > stats["mnd"]:
+        intervals = _histogram_intervals(
+            keyed.where(valid), dtype, stats, num_partitions, buckets_per_partition, carry
         )
-        .limit(4 * target)
-        .collect()
-    )
-    if not pairs:
-        return []
-    total_w = sum(w for _, w in pairs)
-    return _borders_from_intervals(
-        [(w, k_, k_) for k_, w in pairs], total_w, num_partitions
-    )
+    else:
+        # Double images collapse (bigints differing only below 2^-53 of
+        # their magnitude) or are non-finite (±Infinity keys make every bin
+        # width infinite), or the type has none: cut at sampled keys.
+        intervals = _sampled_intervals(
+            keyed.where(valid), n, num_partitions, buckets_per_partition, carry
+        )
+    return n, intervals, head, tail
 
 
 def _deterministic_borders(
@@ -235,69 +286,133 @@ def _deterministic_borders(
     num_partitions: int,
     sample_per_partition: int = 64,
 ) -> list:
-    """Equi-depth range borders, deterministic and driver-bounded.
-
-    This is the reference's Sample job (`SlidingAggregation.java:38-84`:
-    Bernoulli-sample the keys, sort the sample, pick the P-1 equi-depth
-    positions — `chooseBorders` :75-83) re-derived with three fixes:
-
-    * its unseeded ``Random`` (:35) is replaced by commutative exact
-      aggregates (count/min/max histogram for numeric keys; value-hash
-      sampling for the rest), so the borders — and therefore the whole
-      partitioning — are a pure function of the data.  (Spark's built-in
-      RangePartitioner samples with a random seed per execution, so a
-      recompute under cache loss could re-border mid-query.)
-    * its single collector receiving O(n/threshold) rows is replaced by
-      bounded collects: histogram buckets (O(P·buckets) rows) or the
-      capped weighted sample — driver bytes n-independent either way.
-    * heavy keys are seen with their exact mass (a histogram bucket that
-      narrows to one key, or the unconditional heavy rule in the
-      fallback), so extreme skew still yields equal-ROW-count ranges.
-
-    Numeric/temporal keys take `_borders_histogram` (bounded shuffle:
-    map-side-combined bucket counts, never a per-distinct-key exchange);
-    other types take `_borders_exact`.  Returns a sorted list of border
-    VALUES; partition j holds keys in (b_{j-1}, b_j].
-    """
+    """Equi-depth range borders, deterministic and driver-bounded: the
+    reference's Sample job (`SlidingAggregation.java:38-84`, picking P-1
+    equi-depth positions — `chooseBorders` :75-83) with its unseeded
+    ``Random`` (:35) replaced by commutative exact aggregates (borders are
+    a pure function of the data, unlike Spark's randomly seeded
+    RangePartitioner), its O(n/threshold)-row collector by bounded
+    collects, and sample weights by EXACT interval counts, so heavy keys
+    weigh their true mass.  Returns sorted border VALUES; range j holds
+    keys in (b_{j-1}, b_j]."""
     if num_partitions <= 1:
         return []
+    n, intervals, _, _ = _intervals(
+        df, order_col, num_partitions, buckets_per_partition=sample_per_partition
+    )
+    return _borders_from_intervals(intervals, n, num_partitions)
+
+
+@dataclass(frozen=True)
+class _Layout:
+    """Everything the output pass needs, derived on the driver from the
+    exact intervals; every list is indexed by range id."""
+
+    borders: list
+    counts: list  # own rows per range
+    starts: list  # global rank of each range's first row, halo included
+    halo_rows: list  # rows copied into each range from earlier ranges
+    everything: int  # ranges 1..everything copy every earlier row
+    halo_keys: list  # lower key bound of ranges everything+1.. (non-decreasing)
+    carry_in: list  # carry aggregate over all earlier ranges (exclusive)
+
+
+def _layout(df, order_col, num_partitions, halo=0, value_col=None, carry=None) -> _Layout:
+    """Run the border passes and derive borders, exact rank offsets,
+    carry-ins and the halo: range j needs its ``halo`` predecessors, so
+    its halo walks intervals backward from its start until they cover
+    ``halo`` rows (or reach global rank 0) and keeps the lower key bound
+    of the last interval it took."""
+    zero = 0 if carry == "sum" else None
+    if num_partitions <= 1:
+        return _Layout([], [None], [0], [0], 0, [], [zero])
+    n, intervals, head, tail = _intervals(df, order_col, num_partitions, value_col, carry)
+    borders = _borders_from_intervals(intervals, n, num_partitions)
+    # Units in global key order: (range, count, lower key, carry); the
+    # NULL-key rows open range 0, the NaN-key rows close the last range.
+    units, r = [], 0
+    if head[0]:
+        units.append((0, head[0], None, head[1]))
+    for cnt, mn, mx, cv in intervals:
+        units.append((r, cnt, mn, cv))
+        if r < len(borders) and mx == borders[r]:
+            r += 1
+    if tail[0]:
+        units.append((len(borders), tail[0], None, tail[1]))
+
+    def fold(a, b):
+        if a is None or b is None:
+            return b if a is None else a
+        return a + b if carry == "sum" else max(a, b)
+
+    size = len(borders) + 1
+    counts, totals, first = [0] * size, [None] * size, [None] * size
+    for i, (r, cnt, _lo, cv) in enumerate(units):
+        counts[r] += cnt
+        totals[r] = fold(totals[r], cv)
+        first[r] = i if first[r] is None else first[r]
+    offsets, carry_in = [0], [zero]
+    for j in range(1, size):
+        offsets.append(offsets[-1] + counts[j - 1])
+        carry_in.append(fold(carry_in[-1], totals[j - 1]))
+
+    halo_rows, everything, halo_keys = [0] * size, 0, []
+    for j in range(1, size):
+        if not halo or not counts[j]:  # only the last range can be empty
+            continue
+        acc, i = 0, first[j]
+        while i > 0 and acc < halo:
+            i -= 1
+            acc += units[i][1]
+        halo_rows[j] = acc
+        if i == 0:
+            everything = j
+        else:
+            halo_keys.append(units[i][2])
+    starts = [o - h for o, h in zip(offsets, halo_rows)]
+    return _Layout(borders, counts, starts, halo_rows, everything, halo_keys, carry_in)
+
+
+def _by_range(values: list, dtype: str, part: str):
+    """``values[part]`` as a literal array lookup — driver-derived per-range
+    constants enter the plan inline, no DataFrame or broadcast join."""
+    return F.get(F.array(*[F.lit(v) for v in values]).cast(f"array<{dtype}>"), F.col(part))
+
+
+def _spread(df, order_col, lay: _Layout, num_partitions) -> DataFrame:
+    """Tag rows with their range ``_pid``; with a halo, copy rows into
+    every later range ``_dst`` that needs them.  Shuffle once by range."""
+    out = df.withColumn("_pid", _pid_expr(order_col, lay.borders))
+    if not lay.halo_keys and not lay.everything:
+        return out.repartition(num_partitions, "_pid")
     key = F.col(order_col)
-    keyed = df.select(key.alias("_k")).where(key.isNotNull())
-    dtype = dict(keyed.dtypes)["_k"]
-    if dtype in _HIST_TYPES or dtype.startswith("decimal"):
-        return _borders_histogram(keyed, dtype, num_partitions, sample_per_partition)
-    n = keyed.count()
-    if n == 0:
-        return []
-    return _borders_exact(keyed, n, num_partitions, sample_per_partition)
+    reach = F.when(key.isNull(), F.lit(lay.everything)).otherwise(
+        _count_below(key, lay.halo_keys, True, lay.everything)
+    )
+    dst = F.explode(F.sequence(F.col("_pid"), F.greatest(F.col("_pid"), reach)))
+    return out.withColumn("_dst", dst).repartition(num_partitions, "_dst")
 
 
-def _pid_expr(order_col: str, borders: list):
-    """Partition id for a key given sorted borders: partition j holds
-    keys in (b_{j-1}, b_j]; NULL keys take partition 0 (Spark ASC sorts
-    NULLS FIRST).
+def _ranked(df, order_by, num_partitions, rank_col, halo=0, value_col=None, carry=None):
+    """The shared core: border passes, then the output plan up to the
+    global rank — ``df`` plus ``_pid`` (and ``_dst`` with a halo) and
+    ``rank_col``, with the per-range key-order window and the name of the
+    range column it partitions by.  Callers finish with `_own`."""
+    if num_partitions is None:
+        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    lay = _layout(df, order_by[0], num_partitions, halo, value_col, carry)
+    frame = _spread(df, order_by[0], lay, num_partitions)
+    part = "_dst" if "_dst" in frame.columns else "_pid"
+    w = Window.partitionBy(part).orderBy(*[F.col(c) for c in order_by])
+    rank = _by_range(lay.starts, "bigint", part) + F.row_number().over(w) - F.lit(1)
+    return frame.withColumn(rank_col, rank), lay, w, part
 
-    The reference's ``find_border`` is a linear scan
-    (`SlidingAggregation.java:128-134`); a linear WHEN chain reproduces
-    that at O(P) comparisons per row, which at P=1000 is a thousand
-    branches in the hot per-row path.  Built instead as a BALANCED
-    comparison tree over the sorted borders — O(log P) comparisons per
-    row, expression size still O(P), and codegen sees short nested
-    conditionals instead of one kilometer-long chain."""
-    key = F.col(order_col)
 
-    def tree(lo: int, hi: int):
-        # Returns pid expr for keys known to lie in partition range [lo, hi].
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2  # compare against b_mid: <= goes [lo, mid]
-        return F.when(key <= F.lit(borders[mid]), tree(lo, mid)).otherwise(
-            tree(mid + 1, hi)
-        )
-
-    if not borders:
-        return F.lit(0)
-    return F.when(key.isNull(), F.lit(0)).otherwise(tree(0, len(borders)))
+def _own(frame: DataFrame, cols: list) -> DataFrame:
+    """Drop the halo copies: keep each range's own rows."""
+    if "_dst" in frame.columns:
+        frame = frame.where(F.col("_pid") == F.col("_dst"))
+    return frame.select(*cols)
 
 
 def _ranged_with_offsets(
@@ -310,59 +425,20 @@ def _ranged_with_offsets(
     ``value_col`` is given, the global inclusive prefix sum ``_prefix``).
 
     The returned frame is the input plus ``rank`` (dense, 0-based, in
-    ``order_by`` order) [and ``_prefix``]; internal columns are dropped.
-
-    The ranged frame keeps its partition id as an explicit COLUMN
-    computed from deterministic borders (not ``spark_partition_id()``,
-    which is an execution artifact), is cached for the offsets pass and
-    the rank pass, and registered in a bounded session scope (older
-    invocations' frames are evicted) — cache accumulation is bounded at
-    ~one invocation's working set, and because the whole lineage is
-    deterministic, releasing (or losing) the cache can only cost
-    recompute time, never correctness.
+    ``order_by`` order) [and ``_prefix``]: the shared core with an empty
+    halo — each range's exact rank offset and prefix-sum carry-in come
+    from the border passes' intervals.
     """
-    spark = df.sparkSession
-    order_cols = [F.col(c) for c in order_by]
-
-    borders = _deterministic_borders(df, order_by[0], num_partitions)
-    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders)).repartition(
-        num_partitions, "_pid"
-    )
-    ranged = persist_scoped(ranged, _SCOPE)
-
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    integral = value_col is not None and dict(df.dtypes)[value_col] in (
-        "tinyint", "smallint", "int", "bigint",
-    )
+    carry = "sum" if value_col is not None else None
+    frame, lay, w, part = _ranked(df, order_by, num_partitions, "rank", 0, value_col, carry)
+    cols = [*df.columns, "rank"]
     if value_col is not None:
-        aggs.append(F.sum(F.col(value_col)).alias("_total"))
-    stats = sorted(
-        (tuple(r) for r in ranged.groupBy("_pid").agg(*aggs).collect()),
-        key=lambda t: t[0],
-    )
-
-    zero = 0 if integral else 0.0
-    offset_rows, r_acc, s_acc = [], 0, zero
-    for row in stats:
-        pid, n = row[0], row[1]
-        offset_rows.append((pid, r_acc, s_acc))
-        r_acc += n
-        if value_col is not None and row[2] is not None:
-            s_acc += row[2]
-    offsets = spark.createDataFrame(
-        offset_rows,
-        f"_pid int, _rank_off long, _sum_off {'long' if integral else 'double'}",
-    )
-
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = ranged.join(F.broadcast(offsets), "_pid").withColumn(
-        "rank", (F.col("_rank_off") + F.row_number().over(w) - F.lit(1)).cast("long")
-    )
-    if value_col is not None:
+        sum_type = df.select(F.sum(value_col)).schema[0].dataType.simpleString()
         w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        local_prefix = F.coalesce(F.sum(F.col(value_col)).over(w_run), F.lit(zero))
-        out = out.withColumn("_prefix", F.col("_sum_off") + local_prefix)
-    return out.drop("_pid", "_rank_off", "_sum_off")
+        local_prefix = F.coalesce(F.sum(F.col(value_col)).over(w_run), F.lit(0))
+        frame = frame.withColumn("_prefix", _by_range(lay.carry_in, sum_type, part) + local_prefix)
+        cols.append("_prefix")
+    return _own(frame, cols)
 
 
 def sliding_aggregate_scalable(
@@ -379,7 +455,9 @@ def sliding_aggregate_scalable(
 
     Same semantics as ``window.sliding_aggregate`` (0-based rank over
     ``order_by``; frame = rows [max(0, r-window+1), r]).  ``agg`` must be
-    invertible: sum, count, or avg.
+    invertible: sum, count, or avg.  Each range sees its ``window - 1``
+    predecessors through the halo, so the window is the difference of
+    LOCAL running sums, S(r) - S(r-l) = ``_rs - lag(_rs, l)``.
     """
     if window < 1:
         raise ValueError("window must be >= 1")
@@ -388,37 +466,15 @@ def sliding_aggregate_scalable(
             f"scalable path supports invertible aggregates {_INVERTIBLE}; "
             f"use sliding_aggregate (Window path) or a partition_by spec for {agg!r}"
         )
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    integral = dict(df.dtypes)[value_col] in ("tinyint", "smallint", "int", "bigint")
-    zero = 0 if integral else 0.0
-    prefix_df = _ranged_with_offsets(df, order_by, value_col, num_partitions)
-    # Both sides of the prefix-difference self-join read this frame;
-    # cache + barrier so the rank/prefix window pass runs once, not per
-    # subtree (measured ~40% of query time at sf0.1).
-    prefix_df = persist_scoped(prefix_df, _SCOPE)
-    prefix_df.count()
-    if rank_col != "rank":
-        prefix_df = prefix_df.withColumnRenamed("rank", rank_col)
-
-    # Window by prefix difference: S(r) - S(r-l).  1:1 equi-join on a
-    # unique dense key; AQE picks the physical join.
-    lookup = prefix_df.select(
-        (F.col(rank_col) + F.lit(window)).alias(rank_col),
-        F.col("_prefix").alias("_prefix_before"),
+    frame, _, w, _ = _ranked(df, order_by, num_partitions, rank_col, halo=window - 1)
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    frame = frame.withColumn(
+        "_rs", F.coalesce(F.sum(F.col(value_col)).over(w_run), F.lit(0))
     )
-    joined = prefix_df.join(lookup, on=rank_col, how="left")
-    win_sum = F.col("_prefix") - F.coalesce(F.col("_prefix_before"), F.lit(zero))
+    win_sum = F.col("_rs") - F.coalesce(F.lag("_rs", window).over(w), F.lit(0))
     win_count = F.least(F.col(rank_col) + F.lit(1), F.lit(window)).cast("long")
-    if agg == "sum":
-        agg_expr = win_sum
-    elif agg == "count":
-        agg_expr = win_count
-    else:  # avg
-        agg_expr = win_sum / win_count
-    return joined.withColumn(agg_col, agg_expr).drop("_prefix", "_prefix_before")
+    agg_expr = {"sum": win_sum, "count": win_count, "avg": win_sum / win_count}[agg]
+    return _own(frame.withColumn(agg_col, agg_expr), [rank_col, *df.columns, agg_col])
 
 
 def sliding_minmax_scalable(
@@ -443,58 +499,32 @@ def sliding_minmax_scalable(
                           prefix_min(block of r, up to r) )
 
     Both pieces are RUNNING aggregates inside a block (one forward, one
-    backward) — per-block windows, fully parallel, O(window) rows per
-    block.  The suffix piece for rank r-l+1 is fetched with the same
-    1:1 equi self-join on a shifted rank the sum path uses.  Total: one
-    range exchange, two per-block windows, one shuffled join — no
-    replication, no single-partition stage.
+    backward), windowed within ``(range, block)`` — the range exchange
+    already clusters them, so no second exchange.  The halo puts rank
+    r-l+1 in r's range, so the suffix piece is ``lag(_sfx, l-1)`` in the
+    same sort order.  When r-l+1 is a block start the suffix piece is the
+    whole block, which then ends at r: redundant but harmless.
     """
     if window < 1:
         raise ValueError("window must be >= 1")
     if agg not in ("min", "max"):
         raise ValueError("use sliding_aggregate_scalable for invertible aggregates")
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    agg_fn = F.min if agg == "min" else F.max
+    agg_fn, pick = (F.min, F.least) if agg == "min" else (F.max, F.greatest)
 
-    ranked = _ranged_with_offsets(df, order_by, None, num_partitions)
-    if rank_col != "rank":
-        ranked = ranked.withColumnRenamed("rank", rank_col)
-    ranked = ranked.withColumn("_blk", F.expr(f"{rank_col} DIV {window}"))
-
-    # Both pieces share ONE window spec (same partitioning + ascending
-    # order, different frames) so Spark evaluates them in a single
-    # WindowExec pass: no second exchange, no descending re-sort.
-    w_base = Window.partitionBy("_blk").orderBy(F.col(rank_col))
-    w_fwd = w_base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_bwd = w_base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    pieces = ranked.withColumn("_pfx", agg_fn(F.col(value_col)).over(w_fwd)).withColumn(
-        "_sfx", agg_fn(F.col(value_col)).over(w_bwd)
+    frame, _, _, part = _ranked(df, order_by, num_partitions, rank_col, halo=window - 1)
+    frame = frame.withColumn("_blk", F.expr(f"{rank_col} DIV {window}"))
+    # Rank orders the block windows (ties in ``order_by`` already have
+    # their rank), and all three frames share one sort: (range, _blk, rank).
+    w_blk = Window.partitionBy(part, "_blk").orderBy(rank_col)
+    w_fwd = w_blk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_bwd = w_blk.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    w_lag = Window.partitionBy(part).orderBy("_blk", rank_col)
+    frame = (
+        frame.withColumn("_pfx", agg_fn(F.col(value_col)).over(w_fwd))
+        .withColumn("_sfx", agg_fn(F.col(value_col)).over(w_bwd))
+        .withColumn(agg_col, pick(F.col("_pfx"), F.lag("_sfx", window - 1).over(w_lag)))
     )
-    # Both join sides below reference `pieces`; cache it (columnar,
-    # same scope as the ranged frame) so the window pass is not
-    # evaluated per subtree — there is no common-subplan reuse across
-    # DataFrame self-joins.  The count() is the usual eager barrier so
-    # AQE's concurrent subtree stages don't race the cache population.
-    pieces = persist_scoped(pieces, _SCOPE)
-    pieces.count()
-
-    # Row r looks up the suffix piece at rank r-l+1; ship it keyed by the
-    # rank that will need it.  Rows in r's own block contribute via _pfx,
-    # so when r-l+1 falls in the same block (only possible when
-    # r-l+1 == block start) the suffix piece is redundant but harmless.
-    lookup = pieces.select(
-        (F.col(rank_col) + F.lit(window - 1)).alias(rank_col),
-        F.col("_sfx").alias("_sfx_prev"),
-    )
-    joined = pieces.join(lookup, on=rank_col, how="left")
-    win_val = F.when(
-        F.col("_sfx_prev").isNotNull(), F.least(F.col("_pfx"), F.col("_sfx_prev"))
-        if agg == "min"
-        else F.greatest(F.col("_pfx"), F.col("_sfx_prev")),
-    ).otherwise(F.col("_pfx"))
-    return joined.withColumn(agg_col, win_val).drop("_blk", "_pfx", "_sfx", "_sfx_prev")
+    return _own(frame, [rank_col, *df.columns, agg_col])
 
 
 def prefix_max_scalable(
@@ -513,56 +543,21 @@ def prefix_max_scalable(
     for the global first row) — the dominance test of the skyline
     operator (`operators/skyline.pareto_frontier`): the local window
     ends at ``-1`` and the carry-in stays the same exclusive
-    per-partition composition.
+    per-range composition.
 
-    Same two-pass shape as `_ranged_with_offsets` (O8/O13 in the
-    reference, `SlidingAggregation.java:159-168,305-310`): range
-    partition by deterministic borders, per-partition MAX (P-row
-    collect), driver computes each partition's EXCLUSIVE carry-in max,
-    broadcast back, per-partition running max window, combine with
-    ``greatest``.  Unlike prefix sums max has no inverse, but carry-in
-    composition is associative all the same — O(n/P) per machine,
-    O(P) driver.
+    The shared core with an empty halo (O8/O13 in the reference,
+    `SlidingAggregation.java:159-168,305-310`): the interval pass also
+    yields each interval's max value, the driver folds them into each
+    range's EXCLUSIVE carry-in max, and a per-range running max window
+    combines with it via ``greatest``.  Unlike prefix sums max has no
+    inverse, but carry-in composition is associative all the same —
+    O(n/P) per machine, O(P) driver.  The carry keeps the VALUE
+    column's type.
     """
-    order_cols = [F.col(c) for c in order_by]
-    borders = _deterministic_borders(df, order_by[0], num_partitions)
-    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders)).repartition(
-        num_partitions, "_pid"
-    )
-    ranged = persist_scoped(ranged, _SCOPE)
-    stats = sorted(
-        (tuple(r) for r in ranged.groupBy("_pid").agg(
-            F.max(F.col(value_col)).alias("_mx")).collect()),
-        key=lambda t: t[0],
-    )
-    carry_rows, acc = [], None
-    for pid, mx in stats:
-        carry_rows.append((pid, acc))
-        if mx is not None and (acc is None or mx > acc):
-            acc = mx
-    # Carry column keeps the VALUE column's type — a hardcoded 'long'
-    # would silently retype (or fail createDataFrame for) int/timestamp/
-    # double inputs (ADVICE r7).
-    carry_schema = StructType(
-        [
-            StructField("_pid", IntegerType(), False),
-            StructField("_carry", df.schema[value_col].dataType, True),
-        ]
-    )
-    carries = df.sparkSession.createDataFrame(carry_rows, carry_schema)
-    w_run = Window.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow if inclusive else -1
-    )
+    frame, lay, w, part = _ranked(df, order_by, num_partitions, "_rank", 0, value_col, "max")
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow if inclusive else -1)
     local = F.max(F.col(value_col)).over(w_run)
-    if inclusive:
-        out = F.greatest(local, F.coalesce(F.col("_carry"), local))
-    else:
-        # Either side may be NULL (first row of a partition / first
-        # partition); Spark's greatest skips NULLs, so this is the
-        # exclusive max of whichever exist, NULL only when neither does.
-        out = F.greatest(local, F.col("_carry"))
-    return (
-        ranged.join(F.broadcast(carries), "_pid")
-        .withColumn(out_col, out)
-        .drop("_pid", "_carry")
-    )
+    carry = _by_range(lay.carry_in, df.schema[value_col].dataType.simpleString(), part)
+    # Spark's greatest skips NULLs: either side may be NULL (first row of
+    # a range / first range), NULL only when neither exists.
+    return _own(frame.withColumn(out_col, F.greatest(local, carry)), [*df.columns, out_col])

@@ -19,7 +19,7 @@ and a map-side filter.  The same "shuffle the vocabulary, not the
 corpus" argument as `grouped_weighted_median`; for genuinely
 continuous x, quantize first (the repo-wide integer-grid discipline) —
 and when the distinct-x count still exceeds ``max_domain``, the prefix
-max routes through the two-pass `scale.prefix_max_scalable` plan so no
+max routes through the scalable `scale.prefix_max_scalable` plan so no
 single task ever materializes the whole histogram.
 """
 
@@ -49,9 +49,9 @@ def pareto_frontier(
     The cumulative max over the x-value histogram is an unpartitioned
     window — bounded by |distinct x|, fine for grid-valued domains but
     one task for genuinely continuous x at 100×.  Above ``max_domain``
-    distinct values the prefix max routes through the two-pass
-    `scale.prefix_max_scalable(inclusive=False)` plan instead (range
-    partition → per-partition max → broadcast carry-ins → local
+    distinct values the prefix max routes through the
+    `scale.prefix_max_scalable(inclusive=False)` plan instead (border
+    passes → exact per-range max carry-ins → one range exchange → local
     window), and the survivor filter joins back on x without the
     broadcast (a 2³²-row histogram is not broadcastable).  Deciding
     needs |distinct x|, so the histogram aggregate runs EAGERLY at

@@ -1057,8 +1057,8 @@ def running_revenue_global(spark, sf_dir):
     """GLOBAL running revenue total in (o_orderdate, o_orderkey) order —
     the un-keyed cousin of `window_analytics_orders`' per-customer
     running sum.  An unpartitioned `SUM OVER (ORDER BY …)` collapses to
-    one task in Spark; this runs on the scalable two-pass prefix-sum
-    plan instead (range exchange + P-row offsets — the same machinery as
+    one task in Spark; this runs on the scalable prefix-sum plan instead
+    (exact border-pass carry-ins + one range exchange — the same core as
     the sliding family and `pack_documents`)."""
     from ..operators.scale import _ranged_with_offsets
 
@@ -7906,7 +7906,7 @@ def late_arrival_audit_events(spark, sf_dir):
     events a 10-minute or 1-hour watermark would have dropped and the
     worst observed lateness — the measurement that turns watermark
     choice from folklore into data.  The running max uses
-    `operators/scale.prefix_max_scalable` (two-pass carry-in
+    `operators/scale.prefix_max_scalable` (exact carry-in
     composition, O8/O13 structure) — NO single-partition window over
     the corpus, unlike the oracle's plain unpartitioned SQL window."""
     from ..operators.scale import prefix_max_scalable
