@@ -3,10 +3,10 @@ from __future__ import annotations
 import pytest
 
 from uw_mapreduce_spark.session import get_spark
+from uw_mapreduce_spark.sources.text_kv import REFERENCE_DIR
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
-REF = "/root/reference"
 
 
 @pytest.fixture(scope="session", autouse=True)
@@ -48,4 +48,4 @@ def sf_oracle():
 
 @pytest.fixture(scope="session")
 def reference_dir():
-    return REF
+    return REFERENCE_DIR

@@ -242,17 +242,24 @@ def test_cosine_numpy_blocked_equals_exact(spark, sf_small):
     their block-pair groups and scored executor-side via applyInPandas)
     must emit exactly the Catalyst exact path's pairs, each exactly
     once — every (a < b) pair lives in exactly one block-pair group, so
-    no pair can be dropped or double-counted."""
+    no pair can be dropped or double-counted.  A zero-norm vector has no
+    cosine and must pair with nothing."""
     from uw_mapreduce_spark.operators.similarity import (
         cosine_near_dup_pairs,
         cosine_near_dup_pairs_numpy,
     )
     from uw_mapreduce_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_small, "embeddings")
+    emb = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
     exact = {(r.id_a, r.id_b) for r in cosine_near_dup_pairs(emb, 0.30).collect()}
-    blocked = [(r.id_a, r.id_b) for r in
-               cosine_near_dup_pairs_numpy(emb, 0.30, block_rows=64).collect()]
+    # The Catalyst path divides by the zero norm (an ANSI error), so the
+    # zero vector joins only the BLAS kernel's input.
+    dim = len(emb.first()["embedding"])
+    zero = spark.createDataFrame(
+        [(10**9, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    blocked = [(r.id_a, r.id_b) for r in cosine_near_dup_pairs_numpy(
+        emb.unionByName(zero), 0.30, block_rows=64).collect()]
     assert len(blocked) == len(set(blocked))  # exactly-once across blocks
     assert set(blocked) == exact
 

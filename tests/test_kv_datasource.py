@@ -19,11 +19,11 @@ def registered(spark):
     return spark
 
 
-def test_matches_builtin_reader_on_reference_golden(registered):
+def test_matches_builtin_reader_on_reference_golden(registered, reference_dir):
     from uw_mapreduce_spark.sources.text_kv import read_text_kv
 
     spark = registered
-    p = "/root/reference/input/simple103.txt"
+    p = f"{reference_dir}/input/simple103.txt"
     via_ds = spark.read.format("kvtext").option("path", p).load()
     via_text = read_text_kv(spark, p)
     assert via_ds.schema == via_text.schema

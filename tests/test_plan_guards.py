@@ -206,3 +206,47 @@ def test_scalable_sliding_output_plans_shuffle_once(spark):
         for banned in ("InMemoryRelation", "InMemoryTableScan", "BroadcastExchange",
                        "ExistingRDD", "Scan RDD"):
             assert banned not in plan, (agg, banned)
+
+
+def test_window_route_sorts_once(spark):
+    """The Window route computes the rank and the ROWS frame over one
+    window spec: one Sort and one Window operator.  Ordering the frame
+    by the rank column instead adds a second single-task Sort + Window.
+    With tied keys the frame must still follow the rank order."""
+    from pyspark.sql import functions as F
+
+    from uw_mapreduce_spark.operators.window import sliding_aggregate
+
+    df = spark.range(300).select(
+        (F.col("id") % 7).alias("key"), ((F.col("id") * 13) % 101).alias("value")
+    )
+    out = sliding_aggregate(df, ["key"], "value", 5)
+    plan = _plan(out)
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    rows = sorted((r["rank"], r["value"], r["agg"]) for r in out.collect())
+    vals = [v for _, v, _ in rows]
+    assert [r for r, _, _ in rows] == list(range(300))
+    assert [a for _, _, a in rows] == [sum(vals[max(0, i - 4): i + 1]) for i in range(300)]
+
+
+def test_triangle_closing_join_uses_the_graph_broadcast_gate(spark, monkeypatch):
+    """The triangle closing join broadcasts the edge set under the same
+    `_BCAST_MAX_ROWS` bound as every other graph face, not twice it:
+    with the bound between E/2 and E and auto-broadcast off, nothing in
+    the plan may broadcast, and the counts stay exact."""
+    from uw_mapreduce_spark.operators import graph
+
+    k4 = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)], "src long, dst long"
+    )  # E = 6
+    monkeypatch.setattr(graph, "_BCAST_MAX_ROWS", 4)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = graph.triangle_counts(k4)
+        assert {r["v"]: r["n_triangles"] for r in out.collect()} == {v: 3 for v in range(4)}
+        plan = _plan(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "Broadcast" not in plan, plan

@@ -6,14 +6,14 @@ from __future__ import annotations
 from uw_mapreduce_spark.plans.catalog import QUERIES
 
 
-def test_kvtext_roundtrip_audit_verdict(spark, sf_small):
+def test_kvtext_roundtrip_audit_verdict(spark, sf_small, reference_dir):
     """The O2 write-half face must report a TRUE multiset round-trip
     and aggregates equal to the reference file's own rows."""
     rows = QUERIES["kvtext_roundtrip_audit"](spark, sf_small).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["roundtrip_ok"] is True
-    with open("/root/reference/input/simple103.txt") as f:
+    with open(f"{reference_dir}/input/simple103.txt") as f:
         kv = [tuple(int(x) for x in line.rstrip("\n").split("\t"))
               for line in f if line.strip()]
     assert r["n_rows"] == len(kv)

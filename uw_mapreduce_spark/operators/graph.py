@@ -240,20 +240,18 @@ def triangle_counts(
     )
     closing = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     # Closing join strategy, decided from the EXACT edge count (one
-    # cheap count on the checkpointed frame, guide §3.1): the edge set
-    # is E rows of two longs, so well past the usual auto-broadcast
+    # cheap count on the checkpointed frame, guide §3.1) by the same
+    # `_bcast_if_small` gate as every other graph face: the edge set is
+    # E rows of two longs, so well past the usual auto-broadcast
     # estimate it still builds a modest hash relation — probing it IN
     # the wedge-producing stage means the Σ od² wedge rows never cross
     # an exchange (the former repartition(x, y) + sort-merge semi was
     # the single biggest exchange in the triangle faces).  Above the
     # bound, the r7-OOM-safe est-sized wedge exchange stands unchanged.
-    n_edges = und.count()
-    if n_edges <= 2 * _BCAST_MAX_ROWS:
-        tris = wedges.join(F.broadcast(closing), ["x", "y"], "left_semi")
-    else:
-        tris = wedges.repartition(parts, "x", "y").join(
-            closing, ["x", "y"], "left_semi"
-        )
+    probe = _bcast_if_small(closing, und.count())
+    if probe is closing:  # not broadcast: shuffle the wedges to the edges
+        wedges = wedges.repartition(parts, "x", "y")
+    tris = wedges.join(probe, ["x", "y"], "left_semi")
     per_vertex = (
         tris.select(F.col("lo").alias("v"))
         .unionAll(tris.select(F.col("x").alias("v")))

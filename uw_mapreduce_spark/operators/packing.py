@@ -42,9 +42,6 @@ def pack_documents(
     """
     from .scale import _ranged_with_offsets
 
-    spark = docs.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     out = _ranged_with_offsets(docs, order_by, token_col, num_partitions)
     start = (F.col("_prefix") - F.col(token_col)).cast("long")
     end_incl = (F.col("_prefix") - F.lit(1)).cast("long")  # last token's offset

@@ -17,7 +17,10 @@ Spark-first: O6+O7 *is* `df.orderBy` (RangePartitioner samples borders
 internally — the whole Sample job disappears), and O11 on a dense unique
 rank *is* `repartitionByRange` because equi-depth equals equi-width.
 These wrappers exist so each reference operator is individually callable
-and testable.
+and testable.  The engine's scalable paths do not use them: their borders
+come from `scale.py`'s exact border passes (a deterministic bounded
+histogram whose exact interval counts also give every range its rank
+offset), and they route rows with `scale._pid_expr`.
 """
 
 from __future__ import annotations

@@ -97,9 +97,6 @@ def global_rank_scalable(
     """
     from .scale import _ranged_with_offsets
 
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     out = _ranged_with_offsets(df, order_by, None, num_partitions)
     if rank_col != "rank":
         out = out.withColumnRenamed("rank", rank_col)

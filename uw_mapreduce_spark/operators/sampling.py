@@ -10,9 +10,10 @@ Reference parity:
   reducer, sorts in memory, and emits the P-1 equi-depth quantiles
   (`SlidingAggregation.java:57-84`, `chooseBorders` :75-83, forced single
   reducer :444).  That single-reducer collect is the reference's
-  scalability bug; Spark's `RangePartitioner` (inside `repartitionByRange`
-  / `orderBy`) does the same job with a distributed reservoir sample, so
-  the *engine* never calls this — it exists as a queryable operator for
+  scalability bug.  The engine's scalable paths take their borders from
+  `scale.py`'s exact border passes instead (a deterministic bounded
+  histogram with exact per-interval counts, `scale._layout`), so the
+  *engine* never calls this — it exists as a queryable operator for
   parity and for explicit-border workflows.
 """
 
@@ -35,8 +36,8 @@ def equi_depth_borders(df: DataFrame, col: str, num_partitions: int) -> DataFram
     with s sorted sample values and P partitions, border i (1-based) is the
     sample element at 0-based index ``floor((i * s) / P) - 1`` clamped to
     >= 0 — i.e. the largest value of the i-th equi-depth bucket.  Exact
-    (no sampling) so it is DuckDB-oracle-checkable; production code uses
-    `repartitionByRange`, which samples internally.
+    (no sampling) so it is DuckDB-oracle-checkable; the engine's scalable
+    paths take their borders from `scale.py`'s exact border passes.
 
     No single-partition stage: positions come from ``global_rank_scalable``
     (range-partitioned two-pass prefix count, O(n/P) per task) plus one

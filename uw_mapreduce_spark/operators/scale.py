@@ -395,7 +395,8 @@ def _spread(df, order_col, lay: _Layout, num_partitions) -> DataFrame:
 
 def _ranked(df, order_by, num_partitions, rank_col, halo=0, value_col=None, carry=None):
     """The shared core: border passes, then the output plan up to the
-    global rank — ``df`` plus ``_pid`` (and ``_dst`` with a halo) and
+    global rank (``num_partitions`` None: ``spark.sql.shuffle.partitions``
+    ranges) — ``df`` plus ``_pid`` (and ``_dst`` with a halo) and
     ``rank_col``, with the per-range key-order window and the name of the
     range column it partitions by.  Callers finish with `_own`."""
     if num_partitions is None:
@@ -419,7 +420,7 @@ def _ranged_with_offsets(
     df: DataFrame,
     order_by: list[str],
     value_col: str | None,
-    num_partitions: int,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Range-partition ``df`` and attach global rank (and, when
     ``value_col`` is given, the global inclusive prefix sum ``_prefix``).
@@ -532,7 +533,7 @@ def prefix_max_scalable(
     order_by: list[str],
     value_col: str,
     out_col: str = "prefix_max",
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     inclusive: bool = True,
 ) -> DataFrame:
     """Global running maximum of ``value_col`` in ``order_by`` order,

@@ -32,8 +32,8 @@ _KMEANS_COLUMN_AGG_MAX_DIM = 512
 #: Query-row strip width for the blocked-BLAS kernels: bounds every
 #: sims allocation to strip×block (≤0.5 GB at the 65536 block-rows
 #: cap) while keeping each strip row's FULL sims row (top-k and tie
-#: expansion semantics are strip-invariant).  One knob for all four
-#: strip loops.
+#: expansion semantics are strip-invariant).  Used by the one strip
+#: loop in `_blocked_all_pairs`.
 _STRIP_ROWS = 1024
 
 
@@ -572,6 +572,120 @@ def cosine_near_dup_lsh_blas(
     )
 
 
+def _blocked_all_pairs(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    block_rows: int,
+    schema: str,
+    score,
+    both_directions: bool,
+) -> DataFrame:
+    """Blocked all-pairs BLAS scaffold shared by the exact similarity
+    kernels; each kernel supplies only its per-strip ``score``.
+
+    Zero-norm vectors have no defined cosine and are dropped; the rest
+    are unit-normalised, so a block of cosines is one matmul.
+    ``score(lids, rids, sims, diagonal)`` turns one strip of at most
+    ``_STRIP_ROWS`` left rows scored against a whole right block
+    (``sims``, left × right) into a dict of ``schema`` columns;
+    ``diagonal`` says both sides hold the same rows.
+
+    One block (n ≤ ``block_rows``): collect the corpus once, broadcast
+    it, and score every scan batch against it — no shuffle.  Several
+    blocks: the id space is cut into ranges by the scale core's exact
+    equi-depth borders (`scale._layout`; tags from `scale._pid_expr`),
+    each row is copied into the B block-pairs (min(b, k), max(b, k)) it
+    belongs to, and one ``applyInPandas`` per pair runs the block
+    matmuls executor-side.  Total shuffle is n·B rows — the inherent
+    O(n²/block_rows) data motion of an exact all-pairs join — the driver
+    holds nothing, and a task holds at most two blocks.  A cross pair
+    (block i < j) is scored i against j, and also j against i with
+    ``both_directions``."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    from .scale import _layout, _pid_expr
+
+    slim = corpus.select(id_col, vec_col)
+    n = slim.count()
+    if n == 0:
+        return corpus.sparkSession.createDataFrame([], schema)
+
+    def unit(vecs):
+        mat = np.array(list(vecs), dtype=np.float64)
+        norms = np.linalg.norm(mat, axis=1)
+        nz = norms > 0
+        return nz, mat[nz] / norms[nz, None]
+
+    def strips(lids, lmat, rids, rmat, diagonal):
+        # Strip over left rows: sims stays ≤ strip×block (≤0.5 GB at the
+        # 65k block cap, not 34 GB) while each strip row sees its whole
+        # right block.  At least one (maybe empty) strip, so every group
+        # returns a typed frame.
+        for s0 in range(0, max(len(lmat), 1), _STRIP_ROWS):
+            sims = lmat[s0 : s0 + _STRIP_ROWS] @ rmat.T
+            yield pd.DataFrame(score(lids[s0 : s0 + _STRIP_ROWS], rids, sims, diagonal))
+
+    num_blocks = math.ceil(n / block_rows)
+    if num_blocks == 1:
+        sc = corpus.sparkSession.sparkContext
+        rows = slim.collect()
+        nz, mat = unit(r[1] for r in rows)
+        b_ids = sc.broadcast(np.array([r[0] for r in rows], dtype=np.int64)[nz])
+        b_mat = sc.broadcast(mat)
+
+        def score_batches(batches):
+            for pdf in batches:
+                if len(pdf):
+                    qnz, q = unit(pdf[vec_col])
+                    qids = pdf[id_col].to_numpy()[qnz]
+                    yield from strips(qids, q, b_ids.value, b_mat.value, True)
+
+        # The scan side's partition count IS the parallelism of this
+        # path; a 2-file parquet table would otherwise run the O(n²)
+        # kernel on 2 cores (measured 44 s -> ~4 s at 20k vectors).
+        par = min(sc.defaultParallelism, math.ceil(n / 256))
+        return slim.repartition(par).mapInPandas(score_batches, schema=schema)
+
+    # Exact per-range counts: re-border with more blocks (≤2 retries)
+    # only if a block overshoots the ×4 slack (duplicate-heavy ids).
+    lay = _layout(slim, id_col, num_blocks)
+    for _retry in range(2):
+        if max(lay.counts) <= 4 * block_rows:
+            break
+        num_blocks = max(num_blocks + 1, math.ceil(n / block_rows * 2))
+        lay = _layout(slim, id_col, num_blocks)
+    nb = len(lay.borders) + 1
+    # Row in block b joins (min(b, k), max(b, k)) for every k < nb, so
+    # group (i, j) receives blocks i and j exactly once each.
+    pair_of = F.transform(
+        F.sequence(F.lit(0), F.lit(nb - 1)),
+        lambda k: F.struct(F.least("_blk", k).alias("_pi"), F.greatest("_blk", k).alias("_pj")),
+    )
+    exploded = (
+        slim.withColumn("_blk", _pid_expr(id_col, lay.borders))
+        .select(id_col, vec_col, "_blk", F.explode(pair_of).alias("_p"))
+        .select(id_col, vec_col, "_blk", "_p.*")
+    )
+
+    def score_pair(key, pdf):
+        nz, mat = unit(pdf[vec_col])
+        ids = pdf[id_col].to_numpy()[nz]
+        if key[0] == key[1]:
+            return pd.concat(strips(ids, mat, ids, mat, True), ignore_index=True)
+        left = (pdf["_blk"].to_numpy() == key[0])[nz]
+        lids, lmat, rids, rmat = ids[left], mat[left], ids[~left], mat[~left]
+        parts = list(strips(lids, lmat, rids, rmat, False))
+        if both_directions:
+            parts += strips(rids, rmat, lids, lmat, False)
+        return pd.concat(parts, ignore_index=True)
+
+    return exploded.groupBy("_pi", "_pj").applyInPandas(score_pair, schema=schema)
+
+
 def cosine_near_dup_pairs_numpy(
     corpus: DataFrame,
     threshold: float = 0.45,
@@ -579,7 +693,8 @@ def cosine_near_dup_pairs_numpy(
     vec_col: str = "embedding",
     block_rows: int = 65536,
 ) -> DataFrame:
-    """Exact near-dup pairs with the O(n²) scoring done as BLAS matmul.
+    """Exact near-dup pairs (id_a < id_b) with the O(n²) scoring done as
+    BLAS matmul.
 
     Catalyst higher-order functions evaluate lambdas interpreted and
     allocate per-pair arrays — measured ~10s for 2M pairs; one
@@ -587,160 +702,26 @@ def cosine_near_dup_pairs_numpy(
     is the justified Pandas/Arrow drop-down: dense linear algebra is the
     one thing the built-in expression engine can't express efficiently.
 
-    The pairing is BLOCKED and runs ENTIRELY executor-side: the id
-    space is split into B = ``ceil(n / block_rows)`` ranges
-    (deterministic sampled borders — same machinery as the scalable
-    sliding path), each row is tagged with its block and replicated into
-    the B block-PAIRS it participates in ((min(b,k), max(b,k)) for
-    every k), and one ``applyInPandas`` over groupBy(pair) runs the
-    block-vs-block ``L @ Rᵀ`` matmul per group.  Each qualifying pair
-    (a < b) lives in exactly one group (block ranges are ordered and
-    disjoint), so every pair is emitted exactly once.
-
-    Topology at 100 TB: total shuffle is n·B rows — the inherent
-    O(n²/block_rows) data motion of an exact all-pairs baseline — but
-    it is a single shuffle fanned across B(B+1)/2 independent groups on
-    executors; the DRIVER holds nothing (no collect, no broadcast
-    lifecycle), and per-task memory is bounded by ~2 blocks of vectors.
+    Blocking and strips come from `_blocked_all_pairs`.  Blocks are
+    disjoint, ordered id ranges, so a cross block pair is scored in one
+    direction (a < b holds by construction) and a diagonal block keeps
+    only a < b: every qualifying pair is emitted exactly once.
     ``cosine_near_dup_lsh`` remains the sub-quadratic path when recall
-    < 1 is acceptable.
-
-    At sf0.1 (2k vectors) this is one block — a single broadcast kernel
-    with no shuffle at all (the fast path below).
+    < 1 is acceptable.  At sf0.1 (2k vectors) this is one block — a
+    single broadcast kernel with no shuffle.
     """
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    def pairs(lids, rids, sims, diagonal):
+        ii, jj = np.nonzero(sims >= threshold)
+        a, b = lids[ii], rids[jj]
+        if diagonal:
+            a, b = a[a < b], b[a < b]
+        return {"id_a": a, "id_b": b}
 
-    from .scale import _deterministic_borders
-
-    slim = corpus.select(id_col, vec_col)
-    n = slim.count()
-    if n == 0:
-        return slim.sparkSession.createDataFrame([], "id_a long, id_b long")
-
-    schema = StructType(
-        [StructField("id_a", LongType(), False), StructField("id_b", LongType(), False)]
+    return _blocked_all_pairs(
+        corpus, id_col, vec_col, block_rows, "id_a long, id_b long", pairs, False
     )
-
-    num_blocks = max(1, math.ceil(n / block_rows))
-    if num_blocks == 1:
-        # Fast path: the whole corpus fits one block — collect once
-        # (bounded by block_rows), broadcast, and score every scan batch
-        # against it.  No shuffle; the upper-triangle filter (a < b)
-        # dedups in place.
-        sc = corpus.sparkSession.sparkContext
-        rows = slim.collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        order = np.argsort(ids)
-        b_ids, b_mat = sc.broadcast(ids[order]), sc.broadcast(mat[order])
-
-        def score(batches):
-            blk_ids, blk_mat = b_ids.value, b_mat.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                q /= np.linalg.norm(q, axis=1, keepdims=True)
-                qids = pdf[id_col].to_numpy()
-                # strip over query rows: bounds the sims allocation to
-                # strip×block (≤0.5 GB at the 65k block cap) instead of
-                # arrow_batch×block
-                for s0 in range(0, len(q), _STRIP_ROWS):
-                    sims = q[s0 : s0 + _STRIP_ROWS] @ blk_mat.T
-                    ii, jj = np.nonzero(sims >= threshold)
-                    a, b = qids[s0 + ii], blk_ids[jj]
-                    keep = a < b
-                    yield pd.DataFrame({"id_a": a[keep], "id_b": b[keep]})
-
-        # The scan side's partition count IS the parallelism of this
-        # path (one broadcast-scored batch stream per partition); a
-        # 2-file parquet table would otherwise score the whole O(n²)
-        # kernel on 2 cores (measured 44 s -> ~4 s at 20k vectors).
-        par = max(1, min(sc.defaultParallelism, math.ceil(n / 256)))
-        return slim.repartition(par).mapInPandas(score, schema=schema)
-
-    # Multi-block: executor-side block-pair join.  Borders are a sampled
-    # equi-depth estimate; if any block overshoots the ×4 slack (skewed
-    # or duplicate-heavy ids), re-border globally with more blocks (≤2
-    # retries) — the check is one B-row aggregate, not a data pass.
-    def _tag(borders: list) -> DataFrame:
-        barr = F.array(*[F.lit(int(b)) for b in borders])
-        return slim.withColumn(
-            "_blk", F.size(F.filter(barr, lambda b: b < F.col(id_col)))
-        )
-
-    borders = _deterministic_borders(slim, id_col, num_blocks)
-    for _retry in range(2):
-        counts = [
-            r["count"] for r in _tag(borders).groupBy("_blk").count().collect()
-        ]
-        if max(counts) <= 4 * block_rows:
-            break
-        num_blocks = max(num_blocks + 1, math.ceil(n / block_rows * 2))
-        borders = _deterministic_borders(slim, id_col, num_blocks)
-    # Tag from the FINAL border list so _blk and nb always agree — if the
-    # last retry reassigned borders, a tagged frame built earlier in the
-    # loop would disagree with nb and rows with _blk >= nb would silently
-    # lose their diagonal (b, b) group (ADVICE r6).
-    tagged = _tag(borders)
-    nb = len(borders) + 1  # actual block count after any retry
-
-    # Each row joins every block-pair it belongs to: (min(b,k), max(b,k))
-    # for k in [0, nb) — nb distinct structs per row, so group (i, j)
-    # receives block i's and block j's rows exactly once each.
-    pair_structs = F.transform(
-        F.sequence(F.lit(0), F.lit(nb - 1)),
-        lambda k: F.struct(
-            F.least(F.col("_blk"), k).alias("pi"),
-            F.greatest(F.col("_blk"), k).alias("pj"),
-        ),
-    )
-    exploded = tagged.select(
-        id_col, vec_col, "_blk", F.explode(pair_structs).alias("_p")
-    ).select(id_col, vec_col, "_blk", F.col("_p.pi").alias("_pi"), F.col("_p.pj").alias("_pj"))
-
-    def score_pair(key, pdf):
-        pi, pj = int(key[0]), int(key[1])
-        ids = pdf[id_col].to_numpy()
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-
-        def strips(lids, lmat, rids, rmat, upper_only):
-            # strip over left rows: a full block_rows×block_rows sims
-            # allocation at the 65k default would be 34 GB; strips keep
-            # it ≤0.5 GB with identical flops and output
-            outs = []
-            for s0 in range(0, len(lmat), _STRIP_ROWS):
-                sims = lmat[s0 : s0 + _STRIP_ROWS] @ rmat.T
-                ii, jj = np.nonzero(sims >= threshold)
-                a, b = lids[s0 + ii], rids[jj]
-                if upper_only:
-                    keep = a < b
-                    a, b = a[keep], b[keep]
-                outs.append(pd.DataFrame({"id_a": a, "id_b": b}))
-            return (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-            )
-
-        if pi == pj:
-            return strips(ids, mat, ids, mat, upper_only=True)
-        lmask = (pdf["_blk"] == pi).to_numpy()
-        if not lmask.any() or lmask.all():
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        # Block i's id range precedes block j's entirely, so a < b holds
-        # for every cross pair by construction.
-        return strips(ids[lmask], mat[lmask], ids[~lmask], mat[~lmask],
-                      upper_only=False)
-
-    return exploded.groupBy("_pi", "_pj").applyInPandas(score_pair, schema=schema)
 
 
 def save_ann_index(centroids: DataFrame, path: str) -> None:
@@ -960,7 +941,8 @@ def knn_graph_artifact(
     never served.
 
     The key also carries a BUILDER-VERSION token (hash of the
-    `knn_self_blas` source) so a kernel change invalidates artifacts
+    `knn_self_blas`, `_blocked_all_pairs` and `scale._layout` source)
+    so a kernel change invalidates artifacts
     persisted by older code, and a cache-miss build commits via
     write-temp-then-rename so concurrent sessions can never interleave
     or clobber a committed artifact (`_commit_artifact`).  After a
@@ -980,14 +962,15 @@ def knn_graph_artifact(
     job); the returned frame is always a plain parquet scan."""
     import os
 
-    from .scale import _deterministic_borders
+    from .scale import _layout
 
     spark = corpus.sparkSession
     family = f"k{k}_"
-    # Version covers the kernel AND the helper that shapes its blocks —
-    # a borders-only change also rebuilds.
+    # Version covers the kernel, the shared blocked scaffold AND the
+    # scale function that shapes its blocks — a borders-only change also
+    # rebuilds.
     key = (
-        f"{family}v{_builder_version(knn_self_blas, _deterministic_borders)}"
+        f"{family}v{_builder_version(knn_self_blas, _blocked_all_pairs, _layout)}"
         f"_{_corpus_fingerprint(corpus, id_col, vec_col)}"
     )
     root = _artifact_cache_dir(cache_dir)
@@ -1029,14 +1012,14 @@ def near_dup_pairs_artifact(
     deterministic (the fingerprint and build are independent jobs)."""
     import os
 
-    from .scale import _deterministic_borders
+    from .scale import _layout
 
     spark = corpus.sparkSession
     t_milli = int(round(threshold * 1000))
     family = f"ndp{t_milli}_"
     key = (
         f"{family}"
-        f"v{_builder_version(cosine_near_dup_pairs_numpy, _deterministic_borders)}"
+        f"v{_builder_version(cosine_near_dup_pairs_numpy, _blocked_all_pairs, _layout)}"
         f"_{_corpus_fingerprint(corpus, id_col, vec_col)}"
     )
     root = _artifact_cache_dir(cache_dir)
@@ -1126,64 +1109,40 @@ def knn_self_blas(
     interpreted per-pair dot would cost ~10 s per 2M pairs while one
     block matmul does it in milliseconds).
 
-    Same executor-side block-pair topology as
-    `cosine_near_dup_pairs_numpy`: deterministic id-range blocks, each
-    row replicated to its B block-pairs, one ``applyInPandas`` matmul
-    per group.  Each group emits every member row's top-(k+tie_slack)
-    candidates from the opposite side (both directions off-diagonal,
-    self-masked on the diagonal); a final per-query window over the
-    ≤B·(k+slack) candidates picks the exact global top-k with ties on
-    neighbor id.  Exact-tie families at a block's k-boundary
-    (identical vectors — e.g. duplicated corpora — tie bit-for-bit)
-    are EXPANDED: the whole family at the boundary sim is emitted so
-    the global id-tiebreak stays exact, bounded by a
+    Blocking and strips come from `_blocked_all_pairs`.  Each strip
+    emits every row's top-(k+tie_slack) candidates from the other side
+    (cross block pairs in both directions, self masked on the diagonal);
+    a final per-query window over the ≤B·(k+slack) candidates picks the
+    exact global top-k with ties on neighbor id.  Exact-tie families at
+    a block's k-boundary (identical vectors — e.g. duplicated corpora —
+    tie bit-for-bit) are EXPANDED: the whole family at the boundary sim
+    is emitted so the global id-tiebreak stays exact, bounded by a
     ``max(16·(k+slack), 1024)`` expansion cap that raises only on
-    near-degenerate corpora (a family that size would re-quadratize
-    the plan — dedup the corpus first).  Zero-norm vectors have no defined cosine
-    and are dropped from both roles (``knn_bruteforce`` would surface
-    them as NaN rank-1 neighbors — a gotcha, not a contract).
+    near-degenerate corpora (a family that size would re-quadratize the
+    plan — dedup the corpus first).  Zero-norm vectors have no defined
+    cosine and are dropped from both roles (``knn_bruteforce`` would
+    surface them as NaN rank-1 neighbors — a gotcha, not a contract).
 
     Returns (query_id, neighbor_id, rnk), rnk 1-based.
     """
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from .scale import _deterministic_borders
-
-    slim = corpus.select(id_col, vec_col)
-    n = slim.count()
-    if n == 0:
-        return slim.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rnk long"
-        )
     kk = k + tie_slack
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("_sim", DoubleType(), False),
-        ]
-    )
 
-    def topk_rows(qids, nids, sims):
-        """Per left-row top-kk of sims (rows=qids, cols=nids), emitted
-        as a long frame sorted deterministically (sim desc, nid asc).
-        Fully vectorized (argsort + axis-wise lexsort); only rows whose
-        boundary tie family crosses the cut fall back to per-row
-        expansion — a ~10x map-stage win over the per-row Python loop
-        on 20k-row corpora."""
+    def neighbours(qids, nids, sims, diagonal):
+        """Per left-row top-kk of sims (rows=qids, cols=nids), self
+        masked on the diagonal, emitted as long columns sorted
+        deterministically (sim desc, nid asc).  Fully vectorized
+        (argpartition + axis-wise lexsort); only rows whose boundary tie
+        family crosses the cut fall back to per-row expansion — a ~10x
+        map-stage win over the per-row Python loop on 20k-row corpora."""
+        if diagonal:
+            sims[qids[:, None] == nids[None, :]] = -np.inf
         m = sims.shape[1]
         take = min(kk, m)
         if take <= 0 or not sims.shape[0]:
-            return (
-                np.array([], dtype=np.int64),
-                np.array([], dtype=np.int64),
-                np.array([], dtype=np.float64),
-            )
+            none = np.array([], dtype=np.int64)
+            return {"query_id": none, "neighbor_id": none, "_sim": none.astype(np.float64)}
         # argpartition (introselect) for the unordered top-take — the
         # per-row lexsort below imposes the deterministic order, so a
         # full-width argsort would pay ~2x for ordering that is
@@ -1244,146 +1203,12 @@ def knn_self_blas(
             out_q = np.concatenate([out_q, np.array(ex_q, dtype=np.int64)])
             out_n = np.concatenate([out_n, np.array(ex_n, dtype=np.int64)])
             out_s = np.concatenate([out_s, np.array(ex_s, dtype=np.float64)])
-        return out_q, out_n, out_s
+        return {"query_id": out_q, "neighbor_id": out_n, "_sim": out_s}
 
-    num_blocks = max(1, math.ceil(n / block_rows))
-    if num_blocks == 1:
-        sc = corpus.sparkSession.sparkContext
-        rows = slim.collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        nz = np.linalg.norm(mat, axis=1) > 0
-        ids, mat = ids[nz], mat[nz]
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        order = np.argsort(ids)
-        b_ids, b_mat = sc.broadcast(ids[order]), sc.broadcast(mat[order])
-
-        def score(batches):
-            blk_ids, blk_mat = b_ids.value, b_mat.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                qids = pdf[id_col].to_numpy()
-                qnz = np.linalg.norm(q, axis=1) > 0
-                q, qids = q[qnz], qids[qnz]
-                if not len(q):
-                    continue
-                q /= np.linalg.norm(q, axis=1, keepdims=True)
-                # strip over query rows: bounds sims to strip×block
-                # (≤0.5 GB at the 65k block cap); each strip row still
-                # sees the FULL corpus, so top-k and tie expansion are
-                # unchanged
-                for s0 in range(0, len(q), _STRIP_ROWS):
-                    qi = qids[s0 : s0 + _STRIP_ROWS]
-                    sims = q[s0 : s0 + _STRIP_ROWS] @ blk_mat.T
-                    sims[qi[:, None] == blk_ids[None, :]] = -np.inf
-                    oq, on, os_ = topk_rows(qi, blk_ids, sims)
-                    yield pd.DataFrame(
-                        {"query_id": oq, "neighbor_id": on, "_sim": os_}
-                    )
-
-        # Parallelism of this path = scan-side partition count; a 2-file
-        # parquet corpus would run the O(n²) kernel on 2 cores
-        # (measured 44 s -> ~4 s at 20k vectors on local[32]).
-        par = max(1, min(
-            corpus.sparkSession.sparkContext.defaultParallelism,
-            math.ceil(n / 256),
-        ))
-        cands = slim.repartition(par).mapInPandas(score, schema=schema)
-    else:
-        def _tag(borders: list) -> DataFrame:
-            barr = F.array(*[F.lit(int(b)) for b in borders])
-            return slim.withColumn(
-                "_blk", F.size(F.filter(barr, lambda b: b < F.col(id_col)))
-            )
-
-        borders = _deterministic_borders(slim, id_col, num_blocks)
-        for _retry in range(2):
-            counts = [
-                r["count"] for r in _tag(borders).groupBy("_blk").count().collect()
-            ]
-            if max(counts) <= 4 * block_rows:
-                break
-            num_blocks = max(num_blocks + 1, math.ceil(n / block_rows * 2))
-            borders = _deterministic_borders(slim, id_col, num_blocks)
-        tagged = _tag(borders)
-        nb = len(borders) + 1
-
-        pair_structs = F.transform(
-            F.sequence(F.lit(0), F.lit(nb - 1)),
-            lambda kx: F.struct(
-                F.least(F.col("_blk"), kx).alias("pi"),
-                F.greatest(F.col("_blk"), kx).alias("pj"),
-            ),
-        )
-        exploded = tagged.select(
-            id_col, vec_col, "_blk", F.explode(pair_structs).alias("_p")
-        ).select(
-            id_col, vec_col, "_blk",
-            F.col("_p.pi").alias("_pi"), F.col("_p.pj").alias("_pj"),
-        )
-
-        def score_pair(key, pdf):
-            pi, pj = int(key[0]), int(key[1])
-            ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nzm = np.linalg.norm(mat, axis=1) > 0
-            if not nzm.all():
-                pdf = pdf[nzm]
-                ids, mat = ids[nzm], mat[nzm]
-            if not len(ids):
-                return pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "_sim": []}
-                ).astype({"query_id": "int64", "neighbor_id": "int64", "_sim": "float64"})
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-
-            def topk_strips(lids, lmat, rids, rmat, mask_equal_ids):
-                # strip over query rows (each strip row keeps its FULL
-                # sims row, so top-k + tie expansion are unchanged);
-                # a block_rows² allocation at the 65k default would be
-                # 34 GB — strips bound it at ≤0.5 GB.  Outputs stay
-                # ndarrays end-to-end (concatenate, never element
-                # extends) so the vectorized top-k isn't re-boxed into
-                # Python objects on the at-scale path.
-                oq, on, os_ = [], [], []
-                for s0 in range(0, len(lmat), _STRIP_ROWS):
-                    li = lids[s0 : s0 + _STRIP_ROWS]
-                    sims = lmat[s0 : s0 + _STRIP_ROWS] @ rmat.T
-                    if mask_equal_ids:
-                        sims[li[:, None] == rids[None, :]] = -np.inf
-                    a, b, c = topk_rows(li, rids, sims)
-                    oq.append(a); on.append(b); os_.append(c)
-                return (
-                    np.concatenate(oq) if oq else np.array([], dtype=np.int64),
-                    np.concatenate(on) if on else np.array([], dtype=np.int64),
-                    np.concatenate(os_) if os_ else np.array([], dtype=np.float64),
-                )
-
-            if pi == pj:
-                oq, on, os_ = topk_strips(ids, mat, ids, mat, True)
-                return pd.DataFrame(
-                    {"query_id": oq, "neighbor_id": on, "_sim": os_}
-                )
-            lmask = (pdf["_blk"] == pi).to_numpy()
-            if not lmask.any() or lmask.all():
-                return pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "_sim": []}
-                ).astype({"query_id": "int64", "neighbor_id": "int64", "_sim": "float64"})
-            oq1, on1, os1 = topk_strips(ids[lmask], mat[lmask],
-                                        ids[~lmask], mat[~lmask], False)
-            oq2, on2, os2 = topk_strips(ids[~lmask], mat[~lmask],
-                                        ids[lmask], mat[lmask], False)
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate([oq1, oq2]),
-                    "neighbor_id": np.concatenate([on1, on2]),
-                    "_sim": np.concatenate([os1, os2]),
-                }
-            )
-
-        cands = exploded.groupBy("_pi", "_pj").applyInPandas(score_pair, schema=schema)
-
+    cands = _blocked_all_pairs(
+        corpus, id_col, vec_col, block_rows,
+        "query_id long, neighbor_id long, _sim double", neighbours, True,
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("_sim").desc(), F.col("neighbor_id").asc()
     )

@@ -10,10 +10,12 @@ machinery computes, per record,
     agg(value) OVER (ORDER BY rank ROWS BETWEEN l-1 PRECEDING AND CURRENT ROW)
 
 with rank = 0-based row number over the key order (SURVEY.md §0 — the
-semantics were verified against all three golden output dirs).  Spark's
-`WindowExec` running-frame aggregation uses the same
-prefix-accumulate/retract technique internally, so the moderate-scale
-path is one expression.
+semantics were verified against all three golden output dirs).  The
+moderate-scale path is one window spec: the rank and the ROWS frame share
+one sort and one `WindowExec`.  Spark's sliding-frame `WindowExec`
+re-aggregates its frame buffer as the frame moves — it does not retract —
+so its cost grows with ``window``; the scalable path's prefix-sum
+difference does not.
 
 The aggregate function is pluggable (the reference hardcodes SUM but
 marks the accumulation sites `// Aggregation point`,
@@ -67,14 +69,13 @@ def sliding_aggregate(
         raise ValueError(f"agg must be one of {sorted(AGG_FNS)}") from None
 
     parts = [F.col(c) for c in (partition_by or [])]
-    w_rank = Window.partitionBy(*parts).orderBy(*[F.col(c) for c in order_by])
-    w_agg = (
-        Window.partitionBy(*parts)
-        .orderBy(F.col(rank_col))
-        .rowsBetween(-(window - 1), Window.currentRow)
-    )
-    ranked = df.withColumn(rank_col, (F.row_number().over(w_rank) - F.lit(1)).cast("long"))
-    return ranked.withColumn(agg_col, agg_fn(F.col(value_col)).over(w_agg))
+    # Rank and frame over ONE spec: both window functions run in one
+    # Window operator over one sort, so the frame's rows are exactly the
+    # rank order, ties included.
+    w = Window.partitionBy(*parts).orderBy(*[F.col(c) for c in order_by])
+    ranked = df.withColumn(rank_col, (F.row_number().over(w) - F.lit(1)).cast("long"))
+    frame = w.rowsBetween(-(window - 1), Window.currentRow)
+    return ranked.withColumn(agg_col, agg_fn(F.col(value_col)).over(frame))
 
 
 def sliding_sum_kv(df: DataFrame, window: int) -> DataFrame:

@@ -28,6 +28,7 @@ from ..operators.sampling import bernoulli_sample, equi_depth_borders
 from ..operators.scale import sliding_aggregate_scalable
 from ..operators.window import sliding_aggregate
 from ..sources.tables import load_table
+from ..sources.text_kv import REFERENCE_DIR
 from ._registry import (  # noqa: F401  (re-exported)
     EAGER_FACES,
     ORACLE,
@@ -90,9 +91,6 @@ query("sliding_sum_91_scalable", _SLIDING_SQL.format(pre=90))(
 )
 
 
-_REFERENCE_DIR = "/root/reference"
-
-
 def _golden_oracle(window: int) -> str | None:
     """Oracle for a kvtext golden face: the reference's OWN expected
     output (`expected{window}/part-r-*`, rows ``rank\\tkey\\tsum`` — the
@@ -105,7 +103,7 @@ def _golden_oracle(window: int) -> str | None:
 
     rows = []
     try:
-        for path in sorted(_glob.glob(f"{_REFERENCE_DIR}/expected{window}/part-r-*")):
+        for path in sorted(_glob.glob(f"{REFERENCE_DIR}/expected{window}/part-r-*")):
             with open(path) as f:
                 for line in f:
                     line = line.rstrip("\n")
@@ -146,7 +144,7 @@ def _kvtext_sliding_golden(spark, window: int):
     spark.dataSource.register(KVTextDataSource)
     kv = (
         spark.read.format("kvtext")
-        .option("path", f"{_REFERENCE_DIR}/input/simple103.txt")
+        .option("path", f"{REFERENCE_DIR}/input/simple103.txt")
         .load()
     )
     out = sliding_sum_kv(kv, window)
@@ -1065,10 +1063,7 @@ def running_revenue_global(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "_price_c", F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long")
     )
-    out = _ranged_with_offsets(
-        orders, ["o_orderdate", "o_orderkey"], "_price_c",
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
+    out = _ranged_with_offsets(orders, ["o_orderdate", "o_orderkey"], "_price_c")
     return out.select(
         "o_orderkey", F.col("_prefix").cast("long").alias("run_total_c")
     )
@@ -9872,7 +9867,7 @@ def _simple103_oracle() -> str | None:
     fallback) where the reference tree isn't mounted."""
     rows = []
     try:
-        with open(f"{_REFERENCE_DIR}/input/simple103.txt") as f:
+        with open(f"{REFERENCE_DIR}/input/simple103.txt") as f:
             for line in f:
                 line = line.rstrip("\n")
                 if line:
@@ -9923,7 +9918,7 @@ def kvtext_roundtrip_audit(spark, sf_dir):
     spark.dataSource.register(KVTextDataSource)
     src = (
         spark.read.format("kvtext")
-        .option("path", f"{_REFERENCE_DIR}/input/simple103.txt")
+        .option("path", f"{REFERENCE_DIR}/input/simple103.txt")
         .load()
     )
     tmp = tempfile.mkdtemp(prefix="uwms_kvrt_")

@@ -19,6 +19,8 @@ of the engine is Parquet-first.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -28,6 +30,13 @@ KV_SCHEMA = StructType(
         StructField("key", LongType(), nullable=False),
         StructField("value", LongType(), nullable=False),
     ]
+)
+
+#: Root of the reference checkout whose KV fixtures (``input/*.txt``,
+#: ``expected{16,79,91}/part-r-*``) the golden faces and tests read —
+#: ``$UWMS_REFERENCE_DIR``, else ``~/reference``.
+REFERENCE_DIR = os.environ.get("UWMS_REFERENCE_DIR") or os.path.join(
+    os.path.expanduser("~"), "reference"
 )
 
 
