@@ -1,24 +1,25 @@
-"""Per-query profiling harness for the optimization rounds.
+"""Per-face profiling CLI over the measurement core (`uw_mapreduce_spark.inspect`).
 
-Times individual catalog faces with the bench's methodology (count()
-action, clearCache between reps, min-of-N) at an arbitrary SF dir, and
-optionally dumps the formatted physical plan — the measure-first loop
-of the optimization guide without paying for the whole bench.
+Times catalog faces with the bench's timer (count() action, cache
+cleared before each rep, min-of-N) at any SF dir, and optionally dumps
+each face's formatted physical plan — the measure-first loop without
+paying for the whole bench.
 
     python -m tests.perf_probe NAME [NAME ...] [--sf-dir DIR] [--reps N]
         [--explain OUTDIR] [--suffix TAG] [--noop]
 
---explain writes OUTDIR/<name>_<TAG>.txt with explain("formatted").
---noop times a noop-sink write instead of count() (guide §1.4); the
-  bench's graded numbers stay count()-based, this is for isolating
-  computation during analysis.
+--explain writes OUTDIR/<name>_<TAG>.txt with explain("formatted"), or
+  a `PLAN DUMP FAILED: ...` line when the plan does not build.  With
+  --reps 0 nothing is executed beyond what building the plans runs
+  (iterative kernels still run their per-round collects).
+--noop times a noop-sink write instead of count(); the bench's graded
+  numbers stay count()-based, this isolates computation during analysis.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 
 def main(argv: list[str]) -> int:
@@ -44,63 +45,31 @@ def main(argv: list[str]) -> int:
         else:
             names.append(a); i += 1
 
+    from uw_mapreduce_spark.inspect import formatted_plan, time_face, warm_up
     from uw_mapreduce_spark.plans.catalog import QUERIES
     from uw_mapreduce_spark.session import get_spark
 
     spark = get_spark(app_name="perf-probe")
-    # Same warmup as bench.py: parquet footers + Python worker pool.
-    # (scale-curve dirs hold only documents+embeddings)
-    for t in ("lineitem", "embeddings"):
-        try:
-            spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-            break
-        except Exception:
-            continue
-
-    def _noop(it):
-        yield from it
-
-    warm = spark.range(0, 1024, 1, int(spark.sparkContext.defaultParallelism))
-    warm.mapInPandas(_noop, "id long").count()
-
+    if reps:
+        warm_up(spark, sf_dir)
     if explain_dir:
         os.makedirs(explain_dir, exist_ok=True)
 
     for name in names:
         fn = QUERIES[name]
         if explain_dir:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            with open(os.path.join(explain_dir, f"{name}_{suffix}.txt"), "w") as f:
-                f.write(plan)
-        times = []
-        for rep in range(reps):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"{name} rep{rep}")
-            t0 = time.time()
+            path = os.path.join(explain_dir, f"{name}_{suffix}.txt")
             try:
-                df = fn(spark, sf_dir)
-                if use_noop:
-                    df.write.format("noop").mode("overwrite").save()
-                else:
-                    df.count()
-                times.append(round(time.time() - t0, 3))
-            except Exception as e:
-                msg = " ".join(f"{type(e).__name__}: {e}".split())
-                print(f"ERROR {name} rep{rep}: {msg[:300]}", flush=True)
-                times.append(-1.0)
-            spark.sparkContext.setJobDescription(None)
-            import gc
-            gc.collect()
-        ok = [t for t in times if t >= 0]
-        print(
-            f"TIMES {name}: min={min(ok) if ok else -1.0} raw={times}",
-            flush=True,
-        )
+                plan = formatted_plan(fn(spark, sf_dir))
+            except Exception as e:  # record the failure in the dump
+                plan = f"PLAN DUMP FAILED: {type(e).__name__}: {e}\n"
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"wrote {path} ({len(plan)} chars)", flush=True)
+        if reps:
+            best, times, err = time_face(spark, name, fn, sf_dir, reps, noop=use_noop)
+            print(f"TIMES {name}: min={best} raw={times}" + (f" error={err}" if err else ""),
+                  flush=True)
     spark.stop()
     return 0
 

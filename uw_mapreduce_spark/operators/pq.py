@@ -126,8 +126,6 @@ def pq_train(
     codebook = sv.join(F.broadcast(seed_ids), "vid").select(
         "sub", "code", F.col("sv").alias("cv")
     )
-    if not iterations:
-        return codebook
     # Per Lloyd step: the argmin carries each winner's sub-vector out
     # of `_assign_codes` (the former shape re-joined assignments
     # against the sub-vector frame — one (vid, sub)-keyed exchange +

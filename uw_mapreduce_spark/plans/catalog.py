@@ -35,18 +35,12 @@ from ._registry import (  # noqa: F401  (re-exported)
     QUERIES,
     query,
 )
+from .reference_pipeline import events_u, sliding_events, sliding_events_scalable
 
 
 # --------------------------------------------------------------------------
 # shared fragments
 # --------------------------------------------------------------------------
-
-def events_u(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events + value_u = floor(value·1e6) as int64 (hash-stable sums)."""
-    return load_table(spark, sf_dir, "events").withColumn(
-        "value_u", F.floor(F.col("value") * F.lit(1000000.0)).cast("long")
-    )
-
 
 EVENTS_U_SQL = (
     "SELECT *, CAST(floor(value * 1000000.0) AS BIGINT) AS value_u FROM events"
@@ -65,16 +59,8 @@ FROM base
 
 
 def _sliding(spark, sf_dir, window, scalable=False):
-    fn = sliding_aggregate_scalable if scalable else sliding_aggregate
-    out = fn(
-        events_u(spark, sf_dir),
-        order_by=["ts", "event_id"],
-        value_col="value_u",
-        window=window,
-        agg="sum",
-        agg_col="agg_u",
-    )
-    return out.select("rank", "event_id", "agg_u")
+    fn = sliding_events_scalable if scalable else sliding_events
+    return fn(spark, sf_dir, window).select("rank", "event_id", "agg_u")
 
 
 # --------------------------------------------------------------------------
@@ -6740,7 +6726,7 @@ def quantile_normalize_events(spark, sf_dir):
     hp = hs.groupBy(F.col("v").alias("pv")).agg(
         F.sum("cnt").cast("long").alias("cntp")
     )
-    pp = _ranged_with_offsets(hp, ["pv"], "cntp", 32).select(
+    pp = _ranged_with_offsets(hp, ["pv"], "cntp").select(
         "pv",
         (F.col("_prefix") - F.col("cntp")).cast("long").alias("start_p"),
         F.col("_prefix").cast("long").alias("end_p"),

@@ -3299,7 +3299,7 @@ def _conformal_parts(spark, sf_dir):
         .groupBy("score")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    pref = _ranged_with_offsets(calh, ["score"], "cnt", 16)
+    pref = _ranged_with_offsets(calh, ["score"], "cnt")
     ncal = calh.agg(F.sum("cnt").cast("long").alias("n_cal"))
     kth = ncal.select(
         F.expr("CAST((n_cal + 10) DIV 10 AS BIGINT)").alias("k"), "n_cal"

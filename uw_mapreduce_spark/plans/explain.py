@@ -22,6 +22,7 @@ import sys
 
 
 def explain_catalog(spark, sf_dir: str, names: list[str] | None = None) -> int:
+    from ..inspect import formatted_plan
     from .catalog import EAGER_FACES, QUERIES
 
     selected = names or sorted(QUERIES)
@@ -36,12 +37,7 @@ def explain_catalog(spark, sf_dir: str, names: list[str] | None = None) -> int:
             print(f"SKIP    {name} (eager: runs jobs/writes at call time)")
             continue
         try:
-            df = QUERIES[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = formatted_plan(QUERIES[name](spark, sf_dir))
         except Exception as e:  # surface, keep sweeping
             print(f"FAIL    {name}: {e}")
             failures += 1

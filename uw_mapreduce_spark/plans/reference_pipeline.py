@@ -27,32 +27,30 @@ from ..sources.tables import load_table
 DEFAULT_WINDOW = 91
 
 
-def _events_prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.withColumn("value_u", F.floor(F.col("value") * F.lit(1000000.0)).cast("long"))
+def events_u(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events + value_u = floor(value·1e6) as int64 (hash-stable sums)."""
+    return load_table(spark, sf_dir, "events").withColumn(
+        "value_u", F.floor(F.col("value") * F.lit(1000000.0)).cast("long")
+    )
+
+
+def _sliding_events(spark: SparkSession, sf_dir: str, window: int, fn) -> DataFrame:
+    out = fn(
+        events_u(spark, sf_dir),
+        order_by=["ts", "event_id"],
+        value_col="value_u",
+        window=window,
+        agg="sum",
+        agg_col="agg_u",
+    )
+    return out.select("rank", "event_id", "ts", "value", "agg_u")
 
 
 def sliding_events(spark: SparkSession, sf_dir: str, window: int = DEFAULT_WINDOW) -> DataFrame:
     """Window-API path (single-partition window; fine to ~10M rows)."""
-    out = sliding_aggregate(
-        _events_prepared(spark, sf_dir),
-        order_by=["ts", "event_id"],
-        value_col="value_u",
-        window=window,
-        agg="sum",
-        agg_col="agg_u",
-    )
-    return out.select("rank", "event_id", "ts", "value", "agg_u")
+    return _sliding_events(spark, sf_dir, window, sliding_aggregate)
 
 
 def sliding_events_scalable(spark: SparkSession, sf_dir: str, window: int = DEFAULT_WINDOW) -> DataFrame:
-    """Two-pass mapPartitions path — no single-partition stage (100 TB)."""
-    out = sliding_aggregate_scalable(
-        _events_prepared(spark, sf_dir),
-        order_by=["ts", "event_id"],
-        value_col="value_u",
-        window=window,
-        agg="sum",
-        agg_col="agg_u",
-    )
-    return out.select("rank", "event_id", "ts", "value", "agg_u")
+    """Multi-round range-partitioned path — no single-partition stage (100 TB)."""
+    return _sliding_events(spark, sf_dir, window, sliding_aggregate_scalable)
